@@ -1,15 +1,16 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from webcrawlergo_spark.session import get_spark  # noqa: E402
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pytest", cpus=8, shuffle_partitions=4)
+    s = get_spark("pytest", cpus=min(8, len(os.sched_getaffinity(0))), shuffle_partitions=4)
     yield s
     s.stop()
 

@@ -8,10 +8,11 @@ The UniqueQueue maps onto DataFrame primitives:
   GetMapValue/SetMap    → fetch_flags table semantics (wave engine)
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from webcrawlergo_spark.operators.seenset import dedup_new_urls
-from webcrawlergo_spark.plans.rank import with_global_rank
+from webcrawlergo_spark.plans.rank import _prefix_offsets, with_global_rank
 
 
 def _urls_df(spark, items):
@@ -53,6 +54,16 @@ def test_global_rank_across_partitions(spark):
     rows = ranked.orderBy("rank").collect()
     assert [r["rank"] for r in rows] == list(range(100, 1100))
     assert [int(r["url"]) for r in rows] == list(range(1000))
+
+
+def test_prefix_offsets_rejects_oversized_partitions(spark):
+    """A partition at the monotonically_increasing_id record-field bound
+    is refused on the driver instead of decoding to wrong ranks."""
+    local = spark.range(10).select((F.col("id") % 2).cast("int").alias("_pid"))
+    off = _prefix_offsets(local, F.count("*"), start=3, max_per_pid=6)
+    assert sorted(tuple(r) for r in off.collect()) == [(0, 3), (1, 8)]
+    with pytest.raises(RuntimeError, match="partitions \\[0, 1\\]"):
+        _prefix_offsets(local, F.count("*"), max_per_pid=5)
 
 
 def test_fetch_flag_semantics(web, default_run):

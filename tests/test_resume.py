@@ -5,6 +5,9 @@ uninterrupted run (SURVEY §5.4)."""
 
 import tempfile
 
+from pyspark.sql import functions as F
+
+from webcrawlergo_spark.functions.urlnorm import host_expr
 from webcrawlergo_spark.plans.checkpoint import CheckpointStore
 from webcrawlergo_spark.plans.wave import CrawlConfig, CrawlEngine
 
@@ -94,6 +97,46 @@ def test_lineage_accounting(default_run):
     assert lin["sum(fetched)"] == len(res.crawl_order())
     # with no resume rows, everything ever enqueued = seen minus the seed
     assert lin["sum(enqueued)"] == res.seen.count() - 1
+
+
+def test_lineage_per_partition(default_run):
+    """Every (wave_id, partition_id) lineage row equals a recomputation:
+    dequeued / fetched / virtual_ms from the events log, enqueued from
+    the seen set (an uncapped crawl dequeues each enqueued URL in the
+    wave after the one that enqueued it; the seed is never enqueued)."""
+    res = default_run
+    cfg = CrawlConfig(base_url="http://x/")
+    pid = F.pmod(F.xxhash64(host_expr(F.col("url"))), F.lit(cfg.n_shards)).cast("int")
+    ev = res.events.select("wave_id", "url", "status", pid.alias("partition_id"))
+    per_host = ev.groupBy("wave_id", "partition_id", host_expr(F.col("url"))).agg(
+        F.count("*").alias("dq"), F.sum((F.col("status") == "ok").cast("long")).alias("f")
+    )
+    fetch_side = per_host.groupBy("wave_id", "partition_id").agg(
+        F.sum("dq").alias("dequeued"),
+        F.sum("f").alias("fetched"),
+        (F.max("dq") * cfg.request_delay_ms).alias("virtual_ms"),
+    )
+    first_wave = ev.groupBy("url").agg(F.min("wave_id").alias("w"))
+    enq_side = (
+        res.seen.join(first_wave, "url")
+        .filter(F.col("w") > 0)
+        .groupBy((F.col("w") - 1).alias("wave_id"), pid.alias("partition_id"))
+        .agg(F.count("*").alias("enqueued"))
+    )
+    assert res.seen.join(first_wave, "url", "left_anti").count() == 0
+
+    def rows(df, cols):
+        return sorted(tuple(int(r[c] or 0) for c in cols) for r in df.collect())
+
+    key = ["wave_id", "partition_id"]
+    lin = res.lineage.filter(F.col("dequeued") > 0)
+    assert rows(lin, key + ["dequeued", "fetched", "virtual_ms"]) == rows(
+        fetch_side, key + ["dequeued", "fetched", "virtual_ms"]
+    )
+    lin = res.lineage.filter(F.col("enqueued") > 0)
+    assert rows(lin, key + ["enqueued"]) == rows(enq_side, key + ["enqueued"])
+    # deduped = candidates that were not new: never negative
+    assert res.lineage.filter(F.col("deduped") < 0).count() == 0
 
 
 def test_rollback_then_resume_matches(spark, web, web_dfs, default_run):

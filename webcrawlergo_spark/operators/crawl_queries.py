@@ -24,6 +24,8 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..session import local_df
+
 MAX_DEPTH = 6
 _EDGE_MULS = ((7, 1), (13, 2), (31, 3))  # dst = (src*a + b) % n_docs
 
@@ -136,7 +138,7 @@ def bfs_frontier(edges: DataFrame, seed: int = 0, max_depth: int = MAX_DEPTH) ->
     # edge-side exchange (the pagerank_frame trick).
     n_shuf = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = edges.repartition(n_shuf, F.col("src")).localCheckpoint(eager=True)
-    frontier = spark.createDataFrame([(seed, 0)], "node long, depth int")
+    frontier = local_df(spark, [(seed, 0)], "node long, depth int")
     seen = frontier.select("node")
     out = [frontier]
     for depth in range(1, max_depth + 1):

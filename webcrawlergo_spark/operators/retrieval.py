@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import local_df
+
 K1 = 1.2
 B = 0.75
 TOP_K = 20
@@ -158,9 +160,7 @@ def phrase_search_df(
     count(DISTINCT i) gates the intersection)."""
     spark = docs.sparkSession
     k = len(phrase)
-    pat = spark.createDataFrame(
-        [(i, w) for i, w in enumerate(phrase)], "i long, tok string"
-    )
+    pat = local_df(spark, [(i, w) for i, w in enumerate(phrase)], "i long, tok string")
     toks = docs.select(
         "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "tok")
     )

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from webcrawlergo_spark.plans.rank import with_running_sum
+from webcrawlergo_spark.session import local_df
 
 PCTS = (0.5, 0.95, 0.99)
 
@@ -59,7 +60,7 @@ def exact_percentiles_frame(
     # the checkpointed cum is bit-identical to sum(cnt))
     tot = cum.agg(F.max("cum").cast("bigint").alias("n"))
     targets = (
-        spark.createDataFrame([(p,) for p in pcts], "pct double")
+        local_df(spark, [(p,) for p in pcts], "pct double")
         .crossJoin(F.broadcast(tot))
         .select(
             "pct",

@@ -25,6 +25,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.urlnorm import VALID_SCHEMES
+from ..session import local_df
+
+ROBOTS_RULES_COLS = (
+    "host string, is_allow boolean, prefix string, prefix_len int, hard_fail boolean, regex string"
+)
 
 
 def parse_robots_groups(txt: str) -> list[tuple[list[str], list[tuple[bool, str]]]]:
@@ -113,10 +118,7 @@ def parse_robots_rules(
             )
         if not rules:
             rows.append((host, True, "", 0, False, None))
-    return spark.createDataFrame(
-        rows or [("__none__", True, "", 0, False, None)],
-        "host string, is_allow boolean, prefix string, prefix_len int, hard_fail boolean, regex string",
-    )
+    return local_df(spark, rows or [("__none__", True, "", 0, False, None)], ROBOTS_RULES_COLS)
 
 
 def robots_allowed(candidates: DataFrame, rules: DataFrame) -> DataFrame:

@@ -10,33 +10,57 @@ partition — fine at test scale, a straggler at 10^10 rows. Instead:
    driver-side cumulative sum — #partitions values, not #rows).
 
 This is the classic zipWithIndex recipe expressed in DataFrame ops.
+
+Bit layout of ``monotonically_increasing_id`` (``_mid``), which
+``with_global_rank`` and ``with_host_seq`` decode: the upper 31 bits
+hold the partition index and the lower 33 bits the record's position
+within its partition, so ``_pid = _mid >> 33`` and
+``local_idx = _mid & (2^33 - 1)``. The decoding is exact only while
+every partition holds fewer than 2^33 rows; past that the position
+carries into the partition bits. ``with_global_rank`` checks the bound
+on the driver from the per-partition counts it collects anyway.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import local_df
 
 SMALL_BATCH = 100_000
+MID_LOCAL_BITS = 33  # the record-position field of monotonically_increasing_id
 
 
-def _prefix_offsets(local: DataFrame, per_pid_agg, start: int = 0) -> DataFrame:
+def _prefix_offsets(
+    local: DataFrame, per_pid_agg, start: int = 0, max_per_pid: int | None = None
+) -> DataFrame:
     """Per-partition offset table for the three-step prefix recipe:
     aggregate one value per partition of the PINNED frame (count for
     ranks, sum for running totals — #partitions rows, never #rows),
     cumulative-sum it on the driver, return a broadcastable
     (_pid, _off) frame. Shared by with_global_rank and
-    with_running_sum so the subtle offset logic exists once."""
+    with_running_sum so the subtle offset logic exists once.
+    ``max_per_pid``: exclusive bound every aggregate must stay under."""
     totals = {
         r["_pid"]: r["agg"]
         for r in local.groupBy("_pid").agg(per_pid_agg.alias("agg")).collect()
     }
+    if max_per_pid is not None:
+        over = {pid: n for pid, n in totals.items() if (n or 0) >= max_per_pid}
+        if over:
+            raise RuntimeError(
+                f"partitions {sorted(over)} hold >= {max_per_pid} rows: the "
+                "monotonically_increasing_id record field would overflow into "
+                "the partition bits; raise the partition count"
+            )
     offsets, acc = {}, start
     for pid in sorted(totals):
         offsets[pid] = acc
         acc += int(totals[pid] or 0)
-    return local.sparkSession.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()] or [(0, start)], "_pid int, _off long"
+    return local_df(
+        local.sparkSession,
+        [(pid, off) for pid, off in offsets.items()] or [(0, start)],
+        "_pid int, _off long",
     )
 
 
@@ -84,10 +108,10 @@ def with_global_rank(
     # localCheckpoint pins the partitioning: the count-per-partition pass
     # and the final pass must see identical partition layouts.
     local = local.localCheckpoint(eager=True).withColumn(
-        "_pid", F.shiftright(F.col("_mid"), 33).cast("int")
+        "_pid", F.shiftright(F.col("_mid"), MID_LOCAL_BITS).cast("int")
     )
-    off_df = _prefix_offsets(local, F.count("*"), start)
-    local_idx = F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))
+    off_df = _prefix_offsets(local, F.count("*"), start, max_per_pid=1 << MID_LOCAL_BITS)
+    local_idx = F.col("_mid").bitwiseAND(F.lit((1 << MID_LOCAL_BITS) - 1))
     return (
         local.join(F.broadcast(off_df), "_pid", "left")
         .withColumn(rank_col, (F.coalesce(F.col("_off"), F.lit(start)) + local_idx).cast("long"))
@@ -188,9 +212,9 @@ def with_host_seq(
     )
     local = parted.withColumn("_mid", F.monotonically_increasing_id())
     local = local.localCheckpoint(eager=True)  # pin the partition layout
-    local_idx = F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))
+    local_idx = F.col("_mid").bitwiseAND(F.lit((1 << MID_LOCAL_BITS) - 1))
     local = local.withColumn(
-        "_pid", F.shiftright(F.col("_mid"), 33).cast("int")
+        "_pid", F.shiftright(F.col("_mid"), MID_LOCAL_BITS).cast("int")
     )
     groups = local.groupBy("_pid", host_col).agg(
         F.count("*").alias("_cnt"), F.min(local_idx).alias("_min")

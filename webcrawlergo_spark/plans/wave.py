@@ -42,9 +42,10 @@ parity is guaranteed in the default (uncapped) mode.
 
 from __future__ import annotations
 
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
 
 from ..functions.urlnorm import host_expr, make_normalize_udf, normalize_expr
 from ..operators.linkextract import extract_links
@@ -67,6 +68,7 @@ from ..operators.validate import (
     robots_ok_expr,
     validity_flag,
 )
+from ..session import local_df
 from .checkpoint import CheckpointStore
 from .rank import SMALL_BATCH as RANK_SMALL_BATCH
 from .rank import with_global_rank, with_host_seq
@@ -103,6 +105,22 @@ def minhash_ab(n: int) -> tuple[tuple[int, int], ...]:
     )
 
 FRONTIER_COLS = "url string, host string, depth int, parent_rank long, span_offset int, link_pos int, should_fetch boolean, retry_count int"
+URLS_COLS = "url string, is_monitored boolean, is_alive boolean, last_saved double"
+URL_COLS = "url string"
+FLAGS_COLS = "url string, flag boolean"
+EVENTS_COLS = (
+    "event_rank long, wave_id int, url string, status string, "
+    "fetch_seq long, virtual_ms long"
+)
+PAGES_COLS = "url string, doc_id string, event_rank long"
+LINEAGE_COLS = (
+    "wave_id int, partition_id int, dequeued long, fetched long, deduped long, "
+    "enqueued long, virtual_ms long"
+)
+PAGE_STATS_COLS = (
+    "url string, event_rank long, n_chars int, n_tokens int, marker_hits int, "
+    "fingerprint string, n_media int"
+)
 
 def _bloom_overflow_metric():
     """Any shard holding more keys than its bits_per_key budget ⇒ FPR
@@ -313,7 +331,7 @@ class CrawlEngine:
     # -- state init ---------------------------------------------------------
 
     def _empty(self, schema: str) -> DataFrame:
-        return self.spark.createDataFrame([], schema)
+        return local_df(self.spark, [], schema)
 
     def _with_spans(self, df: DataFrame) -> DataFrame:
         """Attach page content: fetch-sim rows join the docs table by
@@ -406,14 +424,12 @@ class CrawlEngine:
         spark = self.spark
         base = cfg.base_url.rstrip("/")
         # seed (crawl.go:27-30): queue position 0, urls row, map entry
-        seed_frontier = spark.createDataFrame(
-            [(base, self.base_host, 0, -2, 0, 0, False, 0)], FRONTIER_COLS
+        seed_frontier = local_df(
+            spark, [(base, self.base_host, 0, -2, 0, 0, False, 0)], FRONTIER_COLS
         )
-        seed_urls = spark.createDataFrame(
-            [(base, False, True, None)], "url string, is_monitored boolean, is_alive boolean, last_saved double"
-        )
-        seed_seen = spark.createDataFrame([(base,)], "url string")
-        seed_flags = spark.createDataFrame([(base, False)], "url string, flag boolean")
+        seed_urls = local_df(spark, [(base, False, True, None)], URLS_COLS)
+        seed_seen = local_df(spark, [(base,)], URL_COLS)
+        seed_flags = local_df(spark, [(base, False)], FLAGS_COLS)
         if resume_urls is None:
             return seed_frontier, seed_urls, seed_seen, seed_flags
 
@@ -496,25 +512,6 @@ class CrawlEngine:
         should_fetch, retry_count) — the "seed list" path for
         multi-seed frontiers; rows order after the base seed via
         their (parent_rank, span_offset) keys."""
-        cfg = self.cfg
-        spark = self.spark
-        store = CheckpointStore(cfg.checkpoint_dir) if cfg.checkpoint_dir else None
-
-        events_schema = (
-            "event_rank long, wave_id int, url string, status string, "
-            "fetch_seq long, virtual_ms long"
-        )
-        pages_schema = "url string, doc_id string, event_rank long"
-        lineage_schema = (
-            "wave_id int, partition_id int, dequeued long, fetched long, deduped long, "
-            "enqueued long, virtual_ms long"
-        )
-        # append-only logs accumulate as per-wave deltas — unioned
-        # lazily, checkpointed as deltas (O(wave), not O(history))
-        events_deltas: list[DataFrame] = []
-        pages_deltas: list[DataFrame] = []
-        lineage_deltas: list[DataFrame] = []
-        page_stats_deltas: list = []  # DataFrames or in-flight Futures of them
         # Crawl-time analytics (the page_stats branch) depend only on
         # the wave's already-checkpointed `sim` + the static docs
         # table — they are independent of the NEXT wave's work. A
@@ -524,12 +521,43 @@ class CrawlEngine:
         # independent jobs") instead of accumulating into one big
         # serial tail job after the loop (measured: ~15 s of a 82 s
         # 2M-page leg). One worker bounds contention; FIFO scheduling
-        # lets wave jobs continue to grab freed slots.
-        stats_pool = None
-        if cfg.analyze_pages:
-            from concurrent.futures import ThreadPoolExecutor
+        # lets wave jobs continue to grab freed slots. The pool is shut
+        # down however the loop ends; a wave that raises drops the
+        # stats jobs still queued.
+        stats_pool = ThreadPoolExecutor(max_workers=1) if self.cfg.analyze_pages else None
+        try:
+            return self._run(stats_pool, resume_urls, resume, extra_frontier, debug_timing)
+        finally:
+            if stats_pool is not None:
+                stats_pool.shutdown(cancel_futures=True)
 
-            stats_pool = ThreadPoolExecutor(max_workers=1)
+    def _run(
+        self,
+        stats_pool: ThreadPoolExecutor | None,
+        resume_urls: DataFrame | None,
+        resume: bool,
+        extra_frontier: DataFrame | None,
+        debug_timing: bool,
+    ) -> CrawlResult:
+        cfg = self.cfg
+        spark = self.spark
+        store = CheckpointStore(cfg.checkpoint_dir) if cfg.checkpoint_dir else None
+
+        # append-only logs accumulate as per-wave deltas — unioned
+        # lazily, checkpointed as deltas (O(wave), not O(history))
+        events_deltas: list[DataFrame] = []
+        pages_deltas: list[DataFrame] = []
+        lineage_deltas: list[DataFrame] = []
+        page_stats_deltas: list = []  # DataFrames or in-flight Futures of them
+
+        def settle_stats(wait: bool) -> None:
+            # a failed stats job raises here: once per wave for the
+            # deltas already finished (so the error surfaces at the
+            # wave that caused it), for all of them after the loop
+            page_stats_deltas[:] = [
+                d.result() if isinstance(d, Future) and (wait or d.done()) else d
+                for d in page_stats_deltas
+            ]
 
         if resume and store and store.latest():
             m = store.latest()
@@ -571,7 +599,7 @@ class CrawlEngine:
                         F.lit(True).alias("is_alive"), F.lit(None).cast("double").alias("last_saved"),
                     ).join(urls.select("url"), "url", "left_anti")
                 )
-            invalid = self._empty("url string")
+            invalid = self._empty(URL_COLS)
             event_base = 0
             virtual_base_ms = 0
             wave_id = 0
@@ -586,7 +614,6 @@ class CrawlEngine:
         # observed counters (n_retries + n_deferred + n_enqueued), so
         # the per-wave frontier.count() job disappears
         n_frontier = frontier.count()
-        from pyspark.sql import Observation
 
         # approximate seen-filter tier (bloom or cuckoo) lives across
         # waves: built once (or resumed from the checkpoint), then
@@ -639,6 +666,7 @@ class CrawlEngine:
 
         while wave_id < cfg.max_waves:
             _tick(None)
+            settle_stats(wait=False)
             if n_frontier == 0:
                 break
             # politeness cap (T1): per-host quota, overflow defers.
@@ -653,12 +681,25 @@ class CrawlEngine:
             if cfg.politeness_max_per_host_per_wave is not None:
                 cap = cfg.politeness_max_per_host_per_wave
                 order = [F.col("parent_rank"), F.col("span_offset"), F.col("link_pos")]
-                top, deferred = salted_topk_split(
+                top, over = salted_topk_split(
                     frontier, ["host"], order, cap, salt_on=F.col("url")
                 )
-                batch = top.drop("rk")
-                n_events = batch.count()
+                # ONE materialization of the split, tagged by `_in`: the
+                # batch size, the sim checkpoint and the next frontier
+                # (`deferred`) all read it, and each read of a lazy split
+                # would re-run the salted windows. The batch size rides
+                # the checkpoint as an Observation.
+                obs_split = Observation()
+                split = (
+                    top.drop("rk").withColumn("_in", F.lit(True))
+                    .unionByName(over.withColumn("_in", F.lit(False)))
+                    .observe(obs_split, F.sum(F.col("_in").cast("long")).alias("n_in"))
+                    .localCheckpoint(eager=True)
+                )
+                n_events = int(obs_split.get["n_in"] or 0)
                 n_deferred = n_frontier - n_events
+                batch = split.filter(F.col("_in")).drop("_in")
+                deferred = split.filter(~F.col("_in")).drop("_in")
             else:
                 batch, deferred = frontier, self._empty(FRONTIER_COLS)
                 n_events = n_frontier
@@ -1154,23 +1195,29 @@ class CrawlEngine:
             # A content save sets last_saved = now (reference
             # savePageContent, crawler.go:353-355) — without it the
             # engine's own output registry can't drive T7 re-crawl
-            # expiry on a later run.
-            urls = (
-                urls.join(dead.withColumn("_dead", F.lit(True)), "url", "left")
-                .withColumn("is_alive", F.when(F.col("_dead"), F.lit(False)).otherwise(F.col("is_alive")))
-                .drop("_dead")
-            )
-            if cfg.marked_paths or flags_live:
-                saved_set = wave_pages.select("url").distinct().withColumn("_saved_now", F.lit(True))
-                urls = (
-                    urls.join(saved_set, "url", "left")
-                    .withColumn(
-                        "last_saved",
-                        F.when(F.col("_saved_now"), F.lit(float(cfg.now_ts))).otherwise(F.col("last_saved")),
-                    )
-                    .drop("_saved_now")
+            # expiry on a later run. The wave's dead-marks and saves
+            # fold into ONE per-url outcome frame, so the O(history)
+            # registry goes through one join (one shuffle) per wave.
+            # (With no marked paths and no live flags nothing is saved:
+            # the pages branch is a constant-false filter the optimizer
+            # prunes.)
+            outcome = (
+                dead.select("url", F.lit(True).alias("_dead"), F.lit(False).alias("_saved"))
+                .unionByName(
+                    wave_pages.select("url", F.lit(False).alias("_dead"), F.lit(True).alias("_saved"))
                 )
-            urls = urls.unionByName(
+                .groupBy("url")
+                .agg(F.max("_dead").alias("_dead"), F.max("_saved").alias("_saved"))
+            )
+            urls = (
+                urls.join(outcome, "url", "left")
+                .withColumn("is_alive", F.when(F.col("_dead"), F.lit(False)).otherwise(F.col("is_alive")))
+                .withColumn(
+                    "last_saved",
+                    F.when(F.col("_saved"), F.lit(float(cfg.now_ts))).otherwise(F.col("last_saved")),
+                )
+                .drop("_dead", "_saved")
+            ).unionByName(
                 new_urls.select(
                     "url", F.col("marked").alias("is_monitored"),
                     F.lit(True).alias("is_alive"), F.lit(None).cast("double").alias("last_saved"),
@@ -1208,39 +1255,42 @@ class CrawlEngine:
             # sequentially with request_delay_ms spacing (the reference's
             # per-worker sleep, crawler.go:326), hosts in parallel — so a
             # shard's virtual wall-clock is its busiest host's queue
-            # length × delay. Two-level agg, still one shuffle.
+            # length × delay. One two-level aggregate over a tagged
+            # union of the wave's events (dq, f), candidates (cand) and
+            # new URLs (enq): one shuffle, no joins. Candidate and
+            # new-URL rows carry a NULL host — they only add to their
+            # shard's counts, and their dq of 0 never moves the max.
             shard = F.pmod(F.xxhash64("host"), F.lit(cfg.n_shards)).cast("int")
-            lin = (
+            one, zero, no_host = F.lit(1), F.lit(0), F.lit(None).cast("string")
+            tagged = (
                 sim.select(
-                    shard.alias("partition_id"),
-                    "host",
-                    F.lit(1).alias("dq"),
-                    (~F.col("transport_fail") & (F.col("http_status") == 200)).cast("long").alias("f"),
+                    shard.alias("partition_id"), "host", one.alias("dq"),
+                    (~F.col("transport_fail") & (F.col("http_status") == 200)).cast("int").alias("f"),
+                    zero.alias("cand"), zero.alias("enq"),
                 )
-                .groupBy("partition_id", "host")
-                .agg(F.sum("dq").alias("dq"), F.sum("f").alias("f"))
+                .unionByName(firsts.select(
+                    shard.alias("partition_id"), no_host.alias("host"), zero.alias("dq"),
+                    zero.alias("f"), one.alias("cand"), zero.alias("enq"),
+                ))
+                .unionByName(enqueued.select(
+                    shard.alias("partition_id"), no_host.alias("host"), zero.alias("dq"),
+                    zero.alias("f"), zero.alias("cand"), one.alias("enq"),
+                ))
+            )
+            lin = (
+                tagged.groupBy("partition_id", "host")
+                .agg(*[F.sum(c).alias(c) for c in ("dq", "f", "cand", "enq")])
                 .groupBy("partition_id")
                 .agg(
                     F.sum("dq").alias("dequeued"),
                     F.sum("f").alias("fetched"),
+                    (F.sum("cand") - F.sum("enq")).alias("deduped"),
+                    F.sum("enq").alias("enqueued"),
                     (F.max("dq") * F.lit(cfg.request_delay_ms)).cast("long").alias("virtual_ms"),
                 )
-            )
-            enq = enqueued.select(shard.alias("partition_id")).groupBy("partition_id").agg(F.count("*").alias("enqueued"))
-            dup = (
-                firsts.select(shard.alias("partition_id")).groupBy("partition_id").agg(F.count("*").alias("cand"))
-            )
-            lin = (
-                lin.join(enq, "partition_id", "full")
-                .join(dup, "partition_id", "full")
                 .select(
-                    F.lit(wave_id).alias("wave_id"),
-                    "partition_id",
-                    F.coalesce("dequeued", F.lit(0)).alias("dequeued"),
-                    F.coalesce("fetched", F.lit(0)).alias("fetched"),
-                    (F.coalesce("cand", F.lit(0)) - F.coalesce("enqueued", F.lit(0))).alias("deduped"),
-                    F.coalesce("enqueued", F.lit(0)).alias("enqueued"),
-                    F.coalesce("virtual_ms", F.lit(0)).cast("long").alias("virtual_ms"),
+                    F.lit(wave_id).alias("wave_id"), "partition_id", "dequeued", "fetched",
+                    "deduped", "enqueued", "virtual_ms",
                 )
             )
             lineage_deltas.append(lin)
@@ -1303,16 +1353,21 @@ class CrawlEngine:
                 )
                 # the commit write already materialized every state
                 # table — re-reading the committed parquet truncates
-                # lineage with zero extra jobs (replaces the per-wave
-                # eager localCheckpoints of r1)
-                seen = spark.read.parquet(entry["tables"]["seen"])
-                urls = spark.read.parquet(entry["tables"]["urls"])
-                invalid = spark.read.parquet(entry["tables"]["invalid"])
-                frontier = spark.read.parquet(entry["tables"]["frontier"])
+                # lineage (replaces the per-wave eager localCheckpoints
+                # of r1). Passing the written schema keeps the read-back
+                # free of jobs: without it Spark runs a schema-inference
+                # job per parquet read (six per wave).
+                def reread(name):
+                    return spark.read.schema(snap[name].schema).parquet(entry["tables"][name])
+
+                seen = reread("seen")
+                urls = reread("urls")
+                invalid = reread("invalid")
+                frontier = reread("frontier")
                 if flags_live:
-                    fetch_flags = spark.read.parquet(entry["tables"]["fetch_flags"])
+                    fetch_flags = reread("fetch_flags")
                 if obs_commit_tier is not None:
-                    tier_df = spark.read.parquet(entry["tables"][cfg.seen_mode])
+                    tier_df = reread(cfg.seen_mode)
                     tier_chain = 0
                     if int(obs_commit_tier.get["overflow"] or 0):
                         # the rebuild is PERSISTED via an atomic manifest
@@ -1340,12 +1395,9 @@ class CrawlEngine:
                 print(f"  wave {wave_id}: {n_events} events", flush=True)
             wave_id += 1
 
-        if stats_pool is not None:
-            # settle the in-flight materializations (the last wave's
-            # delta may still be running — its job overlapped the
-            # loop's tail phases); errors surface here, not silently
-            page_stats_deltas = [f.result() for f in page_stats_deltas]
-            stats_pool.shutdown()
+        # the last wave's delta may still be running — its job
+        # overlapped the loop's tail phases
+        settle_stats(wait=True)
 
         def _acc(deltas: list[DataFrame], schema: str) -> DataFrame:
             if not deltas:
@@ -1356,15 +1408,12 @@ class CrawlEngine:
             return out
 
         return CrawlResult(
-            events=_acc(events_deltas, events_schema),
+            events=_acc(events_deltas, EVENTS_COLS),
             urls=urls,
-            pages=_acc(pages_deltas, pages_schema),
+            pages=_acc(pages_deltas, PAGES_COLS),
             seen=seen,
             invalid=invalid,
-            lineage=_acc(lineage_deltas, lineage_schema),
+            lineage=_acc(lineage_deltas, LINEAGE_COLS),
             waves=wave_id,
-            page_stats=_acc(
-                page_stats_deltas,
-                "url string, event_rank long, n_chars int, n_tokens int, marker_hits int, fingerprint string, n_media int",
-            ),
+            page_stats=_acc(page_stats_deltas, PAGE_STATS_COLS),
         )

@@ -8,15 +8,79 @@ shuffle partitions sized to cores rather than the 200 default.
 
 At cluster scale the same factory is used by ``spark-submit
 --py-files``; only ``master`` and the memory knobs change.
+
+Rule: engine code never builds a DataFrame from a Python list. Such
+a frame (``spark.createDataFrame`` over a list) is a Python RDD: every
+job that scans its lineage runs Python worker tasks (about 1 s of
+worker CPU per scan of a 1-row frame on a 4-vCPU host). Driver-side
+rows go through ``local_df`` instead, which yields a JVM-local
+``LocalTableScan`` (or an empty ``Range`` projection) that costs
+nothing to re-scan. Only ``sources/`` (test-data generators) is exempt.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+MAX_DRIVER_MEM_MB = 20 * 1024
+DRIVER_MEM_SHARE = 0.6
+
+
+def _memory_limit_bytes() -> int | None:
+    """The tighter of MemAvailable and the cgroup (v2 or v1) limit."""
+    limits = []
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    limits.append(int(line.split()[1]) * 1024)
+    except OSError:
+        pass
+    for path in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit() and int(raw) < (1 << 60):  # "max" / 2^63-ish = unlimited
+            limits.append(int(raw))
+    return min(limits) if limits else None
+
+
+def default_driver_mem() -> str:
+    """Driver heap when SPARK_GRAFT_DRIVER_MEM is unset: min(20g, 60% of
+    the memory this host actually grants). The heap is pre-touched
+    (-Xms = -Xmx + AlwaysPreTouch), so asking for more than the host
+    has kills the JVM before its gateway opens."""
+    limit = _memory_limit_bytes()
+    if limit is None:
+        return f"{MAX_DRIVER_MEM_MB}m"
+    mb = int(limit * DRIVER_MEM_SHARE) >> 20
+    return f"{max(1024, min(MAX_DRIVER_MEM_MB, mb))}m"
+
+
+def local_df(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` under the ``ddl`` schema,
+    JVM-local (see the module rule). Non-empty rows cross once as an
+    Arrow batch (a ``LocalTableScan``); columns are object-typed so
+    pandas never widens an int column holding None to float. Empty
+    frames are a typed projection over ``range(0)``: an empty pandas
+    frame silently falls back to a Python RDD."""
+    schema = StructType.fromDDL(ddl)
+    if not rows:
+        return spark.range(0, 0, 1, 1).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+        )
+    import pandas as pd
+
+    pdf = pd.DataFrame(
+        {f.name: pd.Series([r[i] for r in rows], dtype=object) for i, f in enumerate(schema.fields)}
+    )
+    return spark.createDataFrame(pdf, schema)
 
 
 def get_spark(
@@ -34,6 +98,7 @@ def get_spark(
     """
     cpus = cpus or DEFAULT_CPUS
     shuffle = shuffle_partitions or max(cpus, 8)
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
     builder = (
         SparkSession.builder.master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
         .appName(app_name)
@@ -52,7 +117,7 @@ def get_spark(
         .config("spark.cleaner.periodicGC.interval", "45s")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "20g"))
+        .config("spark.driver.memory", driver_mem)
         # ParallelGC + pre-touched fixed heap: G1's periodic uncommit +
         # re-fault of heap pages dominated wall time in this VM (90%+
         # kernel time, mostly-idle CPUs). A fixed pre-touched heap with
@@ -74,7 +139,7 @@ def get_spark(
             os.environ.get(
                 "SPARK_GRAFT_DRIVER_JAVA_OPTS",
                 "-XX:+UseParallelGC -XX:+AlwaysPreTouch -XX:-DontCompileHugeMethods -Xms"
-                + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "20g"),
+                + driver_mem,
             ),
         )
         .config("spark.ui.enabled", "false")
