@@ -5,7 +5,8 @@
      "queries_cold": {name: sec, ...},   # 1st execution incl. planning+codegen
      "sf": ...,
      "crawl": {urls_per_sec, events, waves, ...},
-     "crawl_bloom": {...},
+     "crawl_cuckoo": {...},
+     "crawl_cuckoo_probe": {...},
      "scaling": {"2v8": .., "8v32": .., "weak": ..}}  # with --scaling
 
 Two workloads:
@@ -229,26 +230,26 @@ def main() -> None:
     spark.read.parquet(os.path.join(SF_DIR, "events.parquet")).count()
     spark.range(1_000_000).selectExpr("md5(cast(id as string)) h").agg({"h": "max"}).collect()
     queries_cold, queries = run_queries(spark, SF_DIR)
-    # crawl warmups: one exact leg, one bloom leg with the probe gate
-    # forced open — the sharded-probe / lazy-OR-in plans JIT-compile
+    # crawl warmups: one exact leg, one cuckoo leg with the probe gate
+    # forced open — the sharded-probe / lazy-absorb plans JIT-compile
     # here so the measured legs compare plans, not codegen
     crawl_bench(spark, max(10_000, n_pages // 4))
-    crawl_bench(spark, max(10_000, n_pages // 4), seen_mode="bloom", bloom_probe_min_seen=0)
-    # THREE measured legs. crawl_bloom = bloom mode AS SHIPPED: below
+    crawl_bench(spark, max(10_000, n_pages // 4), seen_mode="cuckoo", bloom_probe_min_seen=0)
+    # THREE measured legs. crawl_cuckoo = cuckoo mode AS SHIPPED: below
     # the measured crossover gate (CrawlConfig.bloom_probe_min_seen,
     # tools/bloom_crossover.py) the engine runs the exact join with NO
     # shard state (r4: shards are built once at gate-crossing), so at
     # bench corpus sizes this leg measures the adaptive default, NOT
-    # the probe. crawl_bloom_probe forces the gate open so the sharded
+    # the probe. crawl_cuckoo_probe forces the gate open so the sharded
     # cogroup probe + broadcast confirm path is measured too — both
-    # are recorded, neither is assumed. The exact/bloom legs are
+    # are recorded, neither is assumed. The exact/cuckoo legs are
     # INTERLEAVED ×3 and the median leg reported: the host shows ±5%
     # session-ordering drift, larger than the real mode difference
     # (below the gate the two run the same per-wave plan).
-    exact_legs, bloom_legs = [], []
+    exact_legs, cuckoo_legs = [], []
     for _rep in range(3):
         exact_legs.append(crawl_bench(spark, n_pages))
-        bloom_legs.append(crawl_bench(spark, n_pages, seen_mode="bloom"))
+        cuckoo_legs.append(crawl_bench(spark, n_pages, seen_mode="cuckoo"))
 
     def median_leg(legs: list[dict]) -> dict:
         leg = sorted(legs, key=lambda r: r["urls_per_sec"])[len(legs) // 2]
@@ -256,9 +257,9 @@ def main() -> None:
         return leg
 
     crawl = median_leg(exact_legs)
-    crawl_bloom = median_leg(bloom_legs)
-    crawl_bloom_probe = crawl_bench(
-        spark, n_pages, seen_mode="bloom", bloom_probe_min_seen=0
+    crawl_cuckoo = median_leg(cuckoo_legs)
+    crawl_cuckoo_probe = crawl_bench(
+        spark, n_pages, seen_mode="cuckoo", bloom_probe_min_seen=0
     )
     result = {
         "metric": "frontier URLs processed/sec (dequeue→fetch-sim→dedup→enqueue) + headline query suite",
@@ -269,8 +270,8 @@ def main() -> None:
         "sf": sf,
         "cpus": CPUS,
         "crawl": crawl,
-        "crawl_bloom": crawl_bloom,
-        "crawl_bloom_probe": crawl_bloom_probe,
+        "crawl_cuckoo": crawl_cuckoo,
+        "crawl_cuckoo_probe": crawl_cuckoo_probe,
     }
 
     if do_scaling:

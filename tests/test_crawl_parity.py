@@ -47,14 +47,25 @@ def test_default_crawl_parity(default_run, default_golden):
     assert_full_parity(res, g)
 
 
-def test_bloom_mode_is_bit_identical(spark, web, web_dfs, default_golden):
+def test_cuckoo_mode_is_bit_identical(spark, web, web_dfs, default_golden):
     # min_seen=0 forces the sharded probe even on this tiny corpus —
     # otherwise the gate would fall back to the exact join and the
-    # test would pass without exercising the bloom path
-    res = run_engine(
-        spark, web, web_dfs, seen_mode="bloom", n_shards=4, bloom_probe_min_seen=0
-    ).run()
+    # test would pass without exercising the cuckoo path
+    eng = run_engine(
+        spark, web, web_dfs, seen_mode="cuckoo", n_shards=4, bloom_probe_min_seen=0
+    )
+    res = eng.run()
+    assert eng.tier.df is not None  # the probe path really ran
     assert_full_parity(res, default_golden)
+
+
+def test_min_content_chars_parity(spark, web, web_dfs, default_golden):
+    """P14 save guard (reference crawler.go:346-348): pages with less
+    rendered content than min_content_chars are fetched but not saved."""
+    g = crawl_golden(web, min_content_chars=300)
+    assert 0 < len(g.saved_pages) < len(default_golden.saved_pages)  # drops some saves
+    res = run_engine(spark, web, web_dfs, min_content_chars=300).run()
+    assert_full_parity(res, g)
 
 
 def test_politeness_cap_preserves_sets(spark, web, web_dfs, default_run, default_golden):

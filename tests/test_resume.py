@@ -3,6 +3,7 @@ drop all in-memory state, resume from the Parquet-manifest
 checkpoint, and assert the final state is identical to an
 uninterrupted run (SURVEY §5.4)."""
 
+import os
 import tempfile
 
 from pyspark.sql import functions as F
@@ -176,7 +177,7 @@ def test_kill_and_resume_after_reshard(spark, web, web_dfs, default_run):
         base_url=web.base_url,
         marked_paths=web.marked_paths,
         ignore_patterns=web.ignore_patterns,
-        seen_mode="bloom",
+        seen_mode="cuckoo",
         n_shards=2,
         bloom_probe_min_seen=0,
         tier_min_per_shard=4,        # tiny capacity → overflow rebuilds
@@ -191,6 +192,9 @@ def test_kill_and_resume_after_reshard(spark, web, web_dfs, default_run):
         store = CheckpointStore(ckpt)
         # non-vacuity: the kill happened AFTER a reshard beyond n_shards=2
         assert int(store.latest()["meta"]["tier_shards"]) > 2
+        # ... and a commit-time overflow was rebuilt and amended into
+        # the manifest (a rebuild=<wave> snapshot of the tier table)
+        assert any(d.startswith("rebuild=") for d in os.listdir(os.path.join(ckpt, "cuckoo")))
         res = CrawlEngine(
             spark, web_dfs["index"], web_dfs["docs"], web_dfs["robots"],
             CrawlConfig(**base_cfg, checkpoint_dir=ckpt),
@@ -219,36 +223,6 @@ def test_kill_and_resume_cuckoo_mode(spark, web, web_dfs, default_run):
         ).run()
         store = CheckpointStore(ckpt)
         assert "cuckoo" in store.latest()["tables"]  # shards round-tripped
-        res = CrawlEngine(
-            spark, web_dfs["index"], web_dfs["docs"], web_dfs["robots"],
-            CrawlConfig(**base_cfg, checkpoint_dir=ckpt),
-        ).run(resume=True)
-        assert _collect_state(res) == want
-
-
-def test_kill_and_resume_bloom_mode(spark, web, web_dfs, default_run):
-    """T5 × X4: kill/resume with the executor-side bloom tier active.
-    The resumed engine must load the shard TABLE from the manifest
-    (store.load returns the parquet-backed DataFrame — no O(seen)
-    rebuild, no driver blobs) and still finish bit-identical to an
-    uninterrupted exact-mode run. Gate forced open so every wave
-    actually probes the resumed shards."""
-    base_cfg = dict(
-        base_url=web.base_url,
-        marked_paths=web.marked_paths,
-        ignore_patterns=web.ignore_patterns,
-        seen_mode="bloom",
-        n_shards=4,
-        bloom_probe_min_seen=0,
-    )
-    want = _collect_state(default_run)
-    with tempfile.TemporaryDirectory() as ckpt:
-        CrawlEngine(
-            spark, web_dfs["index"], web_dfs["docs"], web_dfs["robots"],
-            CrawlConfig(**base_cfg, checkpoint_dir=ckpt, max_waves=2),
-        ).run()
-        store = CheckpointStore(ckpt)
-        assert "bloom" in store.latest()["tables"]  # shards round-tripped
         res = CrawlEngine(
             spark, web_dfs["index"], web_dfs["docs"], web_dfs["robots"],
             CrawlConfig(**base_cfg, checkpoint_dir=ckpt),

@@ -1,58 +1,26 @@
-"""Seen-set tier tests: bloom shards have no false negatives, the
-bloom dedup path is bit-identical to the exact anti-join, and the
-cuckoo overflow tier supports insert/contains/delete."""
+"""Seen-set tier tests: the cuckoo shard probe is executor-side with
+no false negatives, the confirm strategy is gated on rows and bytes,
+and the cuckoo filter supports insert/contains/delete."""
 
 import numpy as np
 from pyspark.sql import functions as F
 
 from webcrawlergo_spark.operators.seenset import (
     CuckooFilter,
-    bloom_build,
-    bloom_or_shards,
-    bloom_probe,
-    bloom_probe_sharded,
-    build_bloom_shards,
+    build_cuckoo_shards,
+    cuckoo_probe_sharded,
     dedup_new_urls,
 )
 
 
-def test_bloom_no_false_negatives():
-    rng = np.random.default_rng(42)
-    h1 = rng.integers(0, 2**63, 5000, dtype=np.int64)
-    h2 = rng.integers(0, 2**63, 5000, dtype=np.int64)
-    m = 5000 * 10
-    bits = bloom_build(h1, h2, m)
-    assert bloom_probe(bits, h1, h2, m).all()
-
-
-def test_bloom_fpr_reasonable():
-    rng = np.random.default_rng(7)
-    h1 = rng.integers(0, 2**63, 10000, dtype=np.int64)
-    h2 = rng.integers(0, 2**63, 10000, dtype=np.int64)
-    bits = bloom_build(h1[:5000], h2[:5000], 5000 * 10)
-    fpr = bloom_probe(bits, h1[5000:], h2[5000:], 5000 * 10).mean()
-    assert fpr < 0.05
-
-
-def test_bloom_dedup_equals_exact(spark):
-    seen = spark.range(2000).select(F.concat(F.lit("u"), F.col("id")).alias("url"))
-    cand = spark.range(1500, 3000).select(F.concat(F.lit("u"), F.col("id")).alias("url"))
-    bloom_df = build_bloom_shards(seen, n_shards=8)
-    exact = sorted(r["url"] for r in dedup_new_urls(cand, seen).collect())
-    bloom = sorted(
-        r["url"] for r in dedup_new_urls(cand, seen, bloom_df=bloom_df, n_shards=8).collect()
-    )
-    assert exact == bloom == [f"u{i}" for i in range(2000, 3000)]
-
-
-def test_bloom_probe_is_executor_side(spark):
+def test_cuckoo_probe_is_executor_side(spark):
     """The probe plan is a cogrouped FlatMapCoGroupsInPandas — the
-    shard blobs arrive via the shuffle (one blob per task), never as a
-    whole-table broadcast; the driver holds no blob between calls."""
+    shard tables arrive via the shuffle (one table per task), never as
+    a whole-table broadcast; the driver holds no table between calls."""
     seen = spark.range(1000).select(F.concat(F.lit("u"), F.col("id")).alias("url"))
     cand = spark.range(500, 1500).select(F.concat(F.lit("u"), F.col("id")).alias("url"))
-    bloom_df = build_bloom_shards(seen, n_shards=8)
-    flagged = bloom_probe_sharded(cand, bloom_df, n_shards=8)
+    cuckoo_df = build_cuckoo_shards(seen, n_shards=8)
+    flagged = cuckoo_probe_sharded(cand, cuckoo_df, n_shards=8)
     plan = flagged._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapCoGroupsInPandas" in plan
     assert "BroadcastExchange" not in plan
@@ -61,36 +29,16 @@ def test_bloom_probe_is_executor_side(spark):
     assert all(rows[f"u{i}"] for i in range(500, 1000))
 
 
-def test_bloom_probe_missing_shard_is_definitely_new(spark):
-    """Candidates hashing to a shard with no blob row (e.g. a fresh
+def test_cuckoo_probe_missing_shard_is_definitely_new(spark):
+    """Candidates hashing to a shard with no table row (e.g. a fresh
     shard before any key landed there) must come back maybe_seen=False
-    — bloom negatives stay exact."""
+    — probe negatives stay exact."""
     seen = spark.range(1).select(F.concat(F.lit("seed"), F.col("id")).alias("url"))
-    bloom_df = build_bloom_shards(seen, n_shards=8)  # ≤1 shard populated
+    cuckoo_df = build_cuckoo_shards(seen, n_shards=8)  # ≤1 shard populated
     cand = spark.range(2000).select(F.concat(F.lit("x"), F.col("id")).alias("url"))
-    flagged = bloom_probe_sharded(cand, bloom_df, n_shards=8)
+    flagged = cuckoo_probe_sharded(cand, cuckoo_df, n_shards=8)
     n_maybe = flagged.filter(F.col("maybe_seen")).count()
     assert n_maybe < 50  # only same-shard false positives survive
-
-
-def test_bloom_or_shards_incremental_bit_equality(spark):
-    """OR-ing the second half into shards built from the first half is
-    bit-identical to building from the whole set at the same sizing —
-    and the result probes with no false negatives."""
-    per_shard = 4096
-    half1 = spark.range(1000).select(F.concat(F.lit("u"), F.col("id")).alias("url"))
-    half2 = spark.range(1000, 2000).select(F.concat(F.lit("u"), F.col("id")).alias("url"))
-    both = half1.unionByName(half2)
-    base = build_bloom_shards(half1, n_shards=4, expected_per_shard=per_shard)
-    ored = bloom_or_shards(
-        base, half2, n_shards=4, default_m_bits=per_shard * 10
-    )
-    full = build_bloom_shards(both, n_shards=4, expected_per_shard=per_shard)
-    a = {r["shard"]: (r["m_bits"], r["n"], bytes(r["bits"])) for r in ored.collect()}
-    b = {r["shard"]: (r["m_bits"], r["n"], bytes(r["bits"])) for r in full.collect()}
-    assert a == b
-    flagged = bloom_probe_sharded(both, ored, n_shards=4)
-    assert flagged.filter(~F.col("maybe_seen")).count() == 0
 
 
 def test_confirm_broadcast_gate_rows_and_bytes(spark):
@@ -152,10 +100,7 @@ def test_cuckoo_rejects_non_power_of_two():
 def test_cuckoo_delete_missing_shard_fabricates_nothing(spark):
     """Deleting keys that hash to a shard with no filter row must NOT
     create an empty table row (it would persist and shuffle forever)."""
-    from webcrawlergo_spark.operators.seenset import (
-        build_cuckoo_shards,
-        cuckoo_delete_shards,
-    )
+    from webcrawlergo_spark.operators.seenset import cuckoo_delete_shards
 
     seen = spark.createDataFrame([("https://h.test/only",)], "url string")
     cuckoo_df = build_cuckoo_shards(seen, n_shards=8)  # 1 shard row
@@ -172,8 +117,6 @@ def test_n_shards_resolved_from_table(spark):
     n_shards=None and the count is read from the table rows — a
     hard-coded default mismatched with the build would route keys to
     the wrong shard and (for cuckoo) silently pass seen URLs as new."""
-    from webcrawlergo_spark.operators.seenset import build_cuckoo_shards
-
     all_urls = [f"https://h.test/r{i}" for i in range(400)]
     seen = spark.createDataFrame([(u,) for u in all_urls[:250]], "url string")
     cuckoo_df = build_cuckoo_shards(seen, n_shards=4)

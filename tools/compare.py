@@ -14,14 +14,15 @@ from __future__ import annotations
 import datetime
 import decimal
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from webcrawlergo_spark.schemas import TESTDATA_TABLES
-from webcrawlergo_spark.session import get_spark
+from webcrawlergo_spark.schemas import TESTDATA_TABLES  # noqa: E402
+from webcrawlergo_spark.session import get_spark  # noqa: E402
 
 
 def _norm(v):
@@ -96,7 +97,6 @@ def _dtype_mismatches(sdf, duck_res) -> list[str]:
 
 
 def run_compare(sf_dir: str, only: list[str] | None = None) -> int:
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
 
     spark = get_spark("compare-harness")

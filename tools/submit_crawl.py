@@ -3,7 +3,7 @@
     spark-submit --py-files dist/webcrawlergo_spark.zip tools/submit_crawl.py \\
         --web-index s3://bucket/web_index --docs s3://bucket/docs \\
         --base-url https://example.test \\
-        --checkpoint-dir s3://bucket/ckpt --seen-mode bloom \\
+        --checkpoint-dir s3://bucket/ckpt --seen-mode cuckoo \\
         [--resume] [--marked /news/ /blog/]
 
 Inputs are parquet tables in the engine's shapes:
@@ -26,7 +26,7 @@ def main() -> None:
     p.add_argument("--robots", default=None, help="JSON-lines file of [host, robots_txt, status]")
     p.add_argument("--base-url", required=True)
     p.add_argument("--checkpoint-dir", required=True)
-    p.add_argument("--seen-mode", default="exact", choices=["exact", "bloom"])
+    p.add_argument("--seen-mode", default="exact", choices=["exact", "cuckoo"])
     p.add_argument("--marked", nargs="*", default=[])
     p.add_argument("--ignore", nargs="*", default=[])
     p.add_argument("--resume", action="store_true")

@@ -122,7 +122,7 @@ def bfs_frontier(edges: DataFrame, seed: int = 0, max_depth: int = MAX_DEPTH) ->
 
     Scale notes: `seen` and `frontier` stay as DataFrames; each wave
     shuffles once on the join key. At 10^10 URLs the anti-join is the
-    bloom-shard probe + exact confirm (operators/seenset.py); here the
+    cuckoo-shard probe + exact confirm (operators/seenset.py); here the
     exact path is used because the oracle demands bit-exactness.
     """
     from pyspark.sql import Observation

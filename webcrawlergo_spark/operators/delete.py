@@ -9,8 +9,8 @@ Spark shape: snapshot-isolation delete = rewrite-minus-anti-join over
 the immutable state tables (the same stance the checkpoint store
 takes instead of row CAS). The cascade is the url_id anti-join on the
 pages log. The approximate seen-set tier stays consistent through
-the CUCKOO filter (operators/seenset.py): bloom cannot forget keys,
-the cuckoo can — so a deleted URL is re-discoverable by a later crawl
+the CUCKOO filter (operators/seenset.py), which can forget keys — so
+a deleted URL is re-discoverable by a later crawl
 without rebuilding the fast path from the exact set.
 """
 

@@ -3,43 +3,32 @@
 The reference's seen-set is a mutexed in-memory map
 (reference queue/queue.go:15-24, FirstEncounter at 55-57). At
 10^10-URL scale a map per executor is impossible; the north rule
-prescribes a sharded bloom filter with a cuckoo-filter overflow tier
-plus an *exact* confirm so results stay bit-for-bit:
+prescribes a sharded approximate-membership tier plus an *exact*
+confirm so results stay bit-for-bit:
 
   candidate --xxhash64 (JVM)--> shard, h1, h2
-            --bloom probe (vectorized numpy over Arrow batches)-->
+            --cuckoo probe (vectorized numpy over Arrow batches)-->
       definite-new  ────────────────────────────► enqueue
       maybe-seen    ──exact anti-join vs urls───► enqueue survivors
 
-Bloom negatives are exact (no false negatives), so only the
-(tiny) positive fraction pays the anti-join. Filters are built
-per-shard with applyInPandas (one numpy bit-array per shard) and live
-EXECUTOR-SIDE for their whole life: the shard table stays a DataFrame
-(shard, m_bits, n, bits), the probe is a cogrouped applyInPandas that
-repartitions candidates by shard so each task holds exactly ONE
-shard's blob, and the per-wave OR-in is a second cogroup producing
-the next shard table — the driver never materializes a blob and no
-task ever sees more than seen_bits/n_shards. (The r2 design
-broadcast the whole shard dict to every executor and kept a driver
-copy: ~12.5 GB per node at the 10^10-URL design point. Now the only
-whole-set transfer is the shard-table shuffle itself, which spreads
-1/n_shards per task.)
+Probe negatives are exact as long as no insert ever failed (the
+tables carry a cumulative n_fail the caller watches), so only the
+(tiny) positive fraction pays the anti-join. The tier is a
+partial-key cuckoo filter (Fan et al., CoNEXT'14 public paper; the
+per-shard kernel is the numpy CuckooFilter class) because it
+supports deletion: it backs the S9 delete / T4 resurrection path
+(cuckoo_delete_shards), where a deleted URL must leave the
+never-recrawl set without an O(seen) rebuild.
 
-The cuckoo tier handles what bloom cannot: deletion. It backs the
-S9 delete / T4 resurrection path (build_cuckoo_shards /
-cuckoo_insert_shards / cuckoo_delete_shards + the ``cuckoo_df=``
-probe in dedup_new_urls): after a registry delete the approximate
-tier forgets the keys too, where a bloom filter would have to be
-rebuilt from the exact set. Since r4 the cuckoo tier is FULLY
-EXECUTOR-SIDE like the bloom tier — the fingerprint tables live in a
-(shard, n_buckets, n, n_fail, table) DataFrame, probe/insert/delete
-are cogrouped applyInPandas jobs where each task holds exactly ONE
-shard's table, and the driver holds no filter state at all (the r3
-tier was a driver-resident numpy table broadcast whole to every
-executor, with per-call collect()s for maintenance — the same
-pattern the bloom tier escaped in r3). Fingerprint/bucket math
-follows the standard partial-key construction (Fan et al., CoNEXT'14
-public paper); the per-shard kernel is the numpy CuckooFilter class.
+The tier lives EXECUTOR-SIDE for its whole life: the fingerprint
+tables are a (shard, n_buckets, n, n_fail, table, n_shards) DataFrame
+built per shard with applyInPandas; probe/insert/delete are cogrouped
+applyInPandas jobs that repartition the keys by shard, so each task
+holds exactly ONE shard's table, and the driver never materializes a
+table (the r2/r3 designs broadcast the whole shard dict to every
+executor and kept a driver copy: ~12.5 GB per node at the 10^10-URL
+design point). The only whole-set transfer is the shard-table shuffle
+itself, which spreads 1/n_shards per task.
 """
 
 from __future__ import annotations
@@ -48,39 +37,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-DEFAULT_BITS_PER_KEY = 10  # ~1% FPR with k=7
-DEFAULT_K = 7
-
-
-# --------------------------------------------------------------------------
-# numpy bloom core (pure functions over uint64 arrays)
-# --------------------------------------------------------------------------
-
-def bloom_build(h1: np.ndarray, h2: np.ndarray, m_bits: int, k: int = DEFAULT_K) -> np.ndarray:
-    """Build a bit array from double-hashing: bit_i = (h1 + i*h2) % m."""
-    bits = np.zeros((m_bits + 7) // 8, dtype=np.uint8)
-    h1 = h1.astype(np.uint64)
-    h2 = h2.astype(np.uint64)
-    for i in range(k):
-        idx = (h1 + np.uint64(i) * h2) % np.uint64(m_bits)
-        np.bitwise_or.at(bits, (idx >> np.uint64(3)).astype(np.int64), (1 << (idx & np.uint64(7))).astype(np.uint8))
-    return bits
-
-
-def bloom_probe(bits: np.ndarray, h1: np.ndarray, h2: np.ndarray, m_bits: int, k: int = DEFAULT_K) -> np.ndarray:
-    """Vectorized membership test → bool array (True = maybe-seen)."""
-    out = np.ones(len(h1), dtype=bool)
-    h1 = h1.astype(np.uint64)
-    h2 = h2.astype(np.uint64)
-    for i in range(k):
-        idx = (h1 + np.uint64(i) * h2) % np.uint64(m_bits)
-        byte = bits[(idx >> np.uint64(3)).astype(np.int64)]
-        out &= (byte & (1 << (idx & np.uint64(7))).astype(np.uint8)) != 0
-        if not out.any():
-            break
-    return out
-
-
 # --------------------------------------------------------------------------
 # numpy cuckoo filter (overflow/deletion tier)
 # --------------------------------------------------------------------------
@@ -88,7 +44,7 @@ def bloom_probe(bits: np.ndarray, h1: np.ndarray, h2: np.ndarray, m_bits: int, k
 class CuckooFilter:
     """Partial-key cuckoo filter: 4-slot buckets, 16-bit fingerprints.
 
-    Supports delete() — the capability bloom lacks — used when a dead
+    Supports delete(), used when a dead
     URL is resurrected (is_alive flips back) and must leave the
     never-recrawl set. Serializable to bytes for checkpointing.
     """
@@ -202,202 +158,12 @@ def with_hashes(df: DataFrame, url_col: str = "url", n_shards: int = 16) -> Data
     )
 
 
-def build_bloom_shards(
-    urls: DataFrame, url_col: str = "url", n_shards: int = 16,
-    bits_per_key: int = DEFAULT_BITS_PER_KEY, k: int = DEFAULT_K,
-    expected_per_shard: int | None = None, growth: int = 2,
-) -> DataFrame:
-    """urls → (shard int, m_bits long, n long, bits binary), one row
-    per shard, built in parallel with applyInPandas. ``growth`` sizes
-    headroom over the current count so incremental OR-ins
-    (bloom_or_shards) don't force an immediate rebuild.
-
-    Sizing rule: the (rare) full build/rebuild delivers ONE shard's
-    key hashes (16 B/key) to one task — pick n_shards ≥
-    total_keys / ~50M so a shard's hash frame stays task-sized
-    (at the 10^10-key design point: n_shards ≥ 256, blob ≈ 780 MB
-    per shard spread one-per-task). The wave engine applies this rule
-    automatically at every (re)build
-    (CrawlConfig.tier_max_keys_per_shard). The per-wave maintenance
-    path (bloom_or_shards) only ever ships a WAVE's keys and is
-    insensitive to total size."""
-    hashed = with_hashes(urls.select(url_col), url_col, n_shards)
-    if expected_per_shard is None:
-        total = urls.count()
-        per_shard = max(1024, (total // max(n_shards, 1)) * growth)
-    else:
-        per_shard = expected_per_shard
-    m_bits = per_shard * bits_per_key
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["_shard"].iloc[0]) if len(pdf) else 0
-        bits = bloom_build(pdf["_h1"].to_numpy(np.uint64), pdf["_h2"].to_numpy(np.uint64), m_bits, k)
-        return pd.DataFrame(
-            {
-                "shard": [shard],
-                "m_bits": [m_bits],
-                "n": [len(pdf)],
-                "bits": [bits.tobytes()],
-                "n_shards": [n_shards],
-            }
-        )
-
-    return hashed.groupBy("_shard").applyInPandas(build, BLOOM_SHARDS_SCHEMA)
-
-
-BLOOM_SHARDS_SCHEMA = T.StructType(
-    [
-        T.StructField("shard", T.IntegerType()),
-        T.StructField("m_bits", T.LongType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("bits", T.BinaryType()),
-        # the shard COUNT the table was built with, carried per row:
-        # probing or maintaining with a mismatched count silently
-        # routes keys to the wrong shard (review r4) — callers that
-        # don't track the count pass n_shards=None and it is read
-        # back from here (table_n_shards)
-        T.StructField("n_shards", T.IntegerType()),
-    ]
-)
-
-
 def table_n_shards(blob_df: DataFrame, default: int = 16) -> int:
-    """The shard count a bloom/cuckoo table was built with (carried on
+    """The shard count a cuckoo table was built with (carried on
     every row). One tiny driver job; callers with the count pinned
     (the wave engine) pass it explicitly instead."""
     row = blob_df.select("n_shards").first()
     return int(row[0]) if row and row[0] is not None else default
-
-
-def _probe_sharded(
-    candidates: DataFrame,
-    blob_df: DataFrame,
-    kernel,
-    url_col: str,
-    n_shards: int | None,
-    probe_salt: int,
-) -> DataFrame:
-    """Shared scaffolding of the executor-side probes (bloom and
-    cuckoo differ only in ``kernel(shard_pdf, h1, h2) -> bool[]``).
-
-    Candidates are repartitioned by their shard and cogrouped with the
-    shard table, so each task reads exactly ONE shard's blob — driver
-    memory and per-executor memory stay flat w.r.t. the seen-set size
-    (the broadcast-dict probe this replaces shipped EVERY shard to
-    EVERY executor). A candidate shard with no blob row is definitely
-    new (maybe_seen = False).
-
-    ``probe_salt`` multiplies probe parallelism past n_shards: the
-    cogroup key is (shard, salt) with the blob row replicated per salt
-    — n_shards*probe_salt tasks, each still holding one blob. The
-    replication cost is salt×(total blob bytes) through the shuffle,
-    spread across the cluster — vs the broadcast's
-    executors×(total blob bytes) to every node.
-    """
-    if n_shards is None:
-        n_shards = table_n_shards(blob_df)
-    out_fields = list(candidates.schema.fields)
-    out_cols = [f.name for f in out_fields]
-    out_schema = T.StructType(out_fields + [T.StructField("maybe_seen", T.BooleanType())])
-    hashed = with_hashes(candidates, url_col, n_shards).withColumn(
-        "_salt", F.pmod(F.col("_h2"), F.lit(probe_salt)).cast("int")
-    )
-    blob_side = blob_df.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(probe_salt)]))
-    )
-
-    def probe(cand: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
-        if not len(cand):
-            return pd.DataFrame(columns=out_cols + ["maybe_seen"])
-        if not len(shard):
-            maybe = np.zeros(len(cand), dtype=bool)
-        else:
-            maybe = kernel(
-                shard,
-                cand["_h1"].to_numpy(np.uint64),
-                cand["_h2"].to_numpy(np.uint64),
-            )
-        out = cand[out_cols].copy()
-        out["maybe_seen"] = maybe
-        return out
-
-    return (
-        hashed.groupBy("_shard", "_salt")
-        .cogroup(blob_side.groupBy("shard", "_salt"))
-        .applyInPandas(probe, out_schema)
-    )
-
-
-def bloom_probe_sharded(
-    candidates: DataFrame,
-    bloom_df: DataFrame,
-    url_col: str = "url",
-    n_shards: int | None = None,
-    k: int = DEFAULT_K,
-    probe_salt: int = 2,
-) -> DataFrame:
-    """Add ``maybe_seen`` via the shard-partitioned executor-side
-    bloom probe (see _probe_sharded for the scaffold)."""
-
-    def kernel(shard: pd.DataFrame, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        m_bits = int(shard["m_bits"].iloc[0])
-        bits = np.frombuffer(shard["bits"].iloc[0], dtype=np.uint8)
-        return bloom_probe(bits, h1, h2, m_bits, k)
-
-    return _probe_sharded(candidates, bloom_df, kernel, url_col, n_shards, probe_salt)
-
-
-def bloom_or_shards(
-    bloom_df: DataFrame,
-    new_urls: DataFrame,
-    url_col: str = "url",
-    n_shards: int | None = None,
-    k: int = DEFAULT_K,
-    default_m_bits: int = 64_000 * DEFAULT_BITS_PER_KEY,
-) -> DataFrame:
-    """Next wave's shard table: OR the new keys' bits into each blob,
-    executor-side (cogroup on shard — the task that ORs a shard holds
-    only that shard's blob plus its wave keys). Shards with no new
-    keys pass through unchanged; keys for a missing shard allocate a
-    fresh ``default_m_bits`` blob. O(new keys + blob bytes) per wave,
-    no driver hop (the r2 path collected every wave's key hashes to
-    the driver and mutated a driver-resident dict)."""
-    if n_shards is None:
-        n_shards = table_n_shards(bloom_df)
-    keys = with_hashes(new_urls.select(url_col), url_col, n_shards).select(
-        "_shard", "_h1", "_h2"
-    )
-
-    def or_in(new: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
-        if not len(shard):
-            sid = int(new["_shard"].iloc[0])
-            m_bits, n = default_m_bits, 0
-            bits = np.zeros((default_m_bits + 7) // 8, dtype=np.uint8)
-        else:
-            sid = int(shard["shard"].iloc[0])
-            m_bits = int(shard["m_bits"].iloc[0])
-            n = int(shard["n"].iloc[0])
-            bits = np.frombuffer(shard["bits"].iloc[0], dtype=np.uint8).copy()
-        if len(new):
-            bits |= bloom_build(
-                new["_h1"].to_numpy(np.uint64), new["_h2"].to_numpy(np.uint64), m_bits, k
-            )
-            n += len(new)
-        return pd.DataFrame(
-            {
-                "shard": [sid],
-                "m_bits": [m_bits],
-                "n": [n],
-                "bits": [bits.tobytes()],
-                "n_shards": [n_shards],
-            }
-        )
-
-    return (
-        keys.groupBy("_shard")
-        .cogroup(bloom_df.groupBy("shard"))
-        .applyInPandas(or_in, BLOOM_SHARDS_SCHEMA)
-    )
 
 
 CUCKOO_SHARDS_SCHEMA = T.StructType(
@@ -408,10 +174,14 @@ CUCKOO_SHARDS_SCHEMA = T.StructType(
         # cumulative failed inserts: a key the kick chain couldn't
         # place is NOT in the filter, so a probe on it could false-
         # negative — callers must treat max(n_fail) > 0 as "resize and
-        # rebuild" (observable as a metric, same as bloom overflow)
+        # rebuild" (observable as a metric on any action over the table)
         T.StructField("n_fail", T.LongType()),
         T.StructField("table", T.BinaryType()),
-        # build-time shard count (see BLOOM_SHARDS_SCHEMA note)
+        # the shard COUNT the table was built with, carried per row:
+        # probing or maintaining with a mismatched count silently
+        # routes keys to the wrong shard (review r4) — callers that
+        # don't track the count pass n_shards=None and it is read
+        # back from here (table_n_shards)
         T.StructField("n_shards", T.IntegerType()),
     ]
 )
@@ -438,11 +208,17 @@ def build_cuckoo_shards(
     growth: int = 2,
 ) -> DataFrame:
     """urls → (shard, n_buckets, n, n_fail, table), one row per shard,
-    built in parallel with applyInPandas — the deletable twin of
-    build_bloom_shards. ``growth`` sizes headroom so incremental
-    inserts (cuckoo_insert_shards) don't immediately overflow. Same
-    scale rule as bloom: the build delivers ONE shard's key hashes to
-    one task; pick n_shards so that stays task-sized."""
+    built in parallel with applyInPandas. ``growth`` sizes headroom so
+    incremental inserts (cuckoo_insert_shards) don't immediately
+    overflow.
+
+    Sizing rule: the (rare) full build/rebuild delivers ONE shard's
+    key hashes (16 B/key) to one task — pick n_shards ≥
+    total_keys / ~50M so a shard's hash frame stays task-sized. The
+    wave engine applies this rule automatically at every (re)build
+    (CrawlConfig.tier_max_keys_per_shard). The per-wave maintenance
+    path (cuckoo_insert_shards) only ever ships a WAVE's keys and is
+    insensitive to total size."""
     hashed = with_hashes(urls.select(url_col), url_col, n_shards)
     if expected_per_shard is None:
         total = urls.count()
@@ -479,17 +255,54 @@ def cuckoo_probe_sharded(
     probe_salt: int = 2,
 ) -> DataFrame:
     """Add ``maybe_seen`` via the shard-partitioned executor-side
-    cuckoo probe (see _probe_sharded for the shared scaffold).
-    Negatives are exact as long as no insert ever failed (track
-    max(n_fail)); positives still need the exact confirm."""
+    probe. Negatives are exact as long as no insert ever failed (track
+    max(n_fail)); positives still need the exact confirm.
 
-    def kernel(shard: pd.DataFrame, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        cf = CuckooFilter.from_bytes(
-            shard["table"].iloc[0], int(shard["n_buckets"].iloc[0])
-        )
-        return cf.contains_many(h1, h2)
+    Candidates are repartitioned by their shard and cogrouped with the
+    shard table, so each task reads exactly ONE shard's table — driver
+    memory and per-executor memory stay flat w.r.t. the seen-set size
+    (the broadcast-dict probe this replaces shipped EVERY shard to
+    EVERY executor). A candidate shard with no table row is definitely
+    new (maybe_seen = False).
 
-    return _probe_sharded(candidates, cuckoo_df, kernel, url_col, n_shards, probe_salt)
+    ``probe_salt`` multiplies probe parallelism past n_shards: the
+    cogroup key is (shard, salt) with the table row replicated per
+    salt — n_shards*probe_salt tasks, each still holding one table.
+    The replication cost is salt×(total table bytes) through the
+    shuffle, spread across the cluster — vs the broadcast's
+    executors×(total table bytes) to every node.
+    """
+    if n_shards is None:
+        n_shards = table_n_shards(cuckoo_df)
+    out_fields = list(candidates.schema.fields)
+    out_cols = [f.name for f in out_fields]
+    out_schema = T.StructType(out_fields + [T.StructField("maybe_seen", T.BooleanType())])
+    hashed = with_hashes(candidates, url_col, n_shards).withColumn(
+        "_salt", F.pmod(F.col("_h2"), F.lit(probe_salt)).cast("int")
+    )
+    table_side = cuckoo_df.withColumn(
+        "_salt", F.explode(F.array(*[F.lit(i) for i in range(probe_salt)]))
+    )
+
+    def probe(cand: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
+        if not len(cand):
+            return pd.DataFrame(columns=out_cols + ["maybe_seen"])
+        if not len(shard):
+            maybe = np.zeros(len(cand), dtype=bool)
+        else:
+            cf = CuckooFilter.from_bytes(shard["table"].iloc[0], int(shard["n_buckets"].iloc[0]))
+            maybe = cf.contains_many(
+                cand["_h1"].to_numpy(np.uint64), cand["_h2"].to_numpy(np.uint64)
+            )
+        out = cand[out_cols].copy()
+        out["maybe_seen"] = maybe
+        return out
+
+    return (
+        hashed.groupBy("_shard", "_salt")
+        .cogroup(table_side.groupBy("shard", "_salt"))
+        .applyInPandas(probe, out_schema)
+    )
 
 
 def _cuckoo_apply_shards(
@@ -576,7 +389,7 @@ def cuckoo_delete_shards(
     default_n_buckets: int = 16_384,
 ) -> DataFrame:
     """Next shard table with ``urls`` deleted (S9 delete / T4
-    resurrection — the capability bloom lacks). Only ever delete
+    resurrection). Only ever delete
     previously-inserted keys: removing a never-inserted key can evict
     a colliding fingerprint and create a false negative."""
     return _cuckoo_apply_shards(
@@ -588,7 +401,6 @@ def dedup_new_urls(
     candidates: DataFrame,
     seen_urls: DataFrame,
     url_col: str = "url",
-    bloom_df: DataFrame | None = None,
     n_shards: int | None = None,
     cuckoo_df: DataFrame | None = None,
     maybe_col: str | None = None,
@@ -599,12 +411,12 @@ def dedup_new_urls(
 ) -> DataFrame:
     """THE dedup operator (J2): candidates not in the seen set.
 
-    Exact path: one anti-join. Bloom/cuckoo path: probe first,
-    anti-join only the maybe-seen fraction, union back the
-    definite-new rows — identical results, a fraction of the shuffle.
-    The cuckoo tier is the DELETABLE variant (S9/T4): after a
-    registry delete the filter forgets the keys too, so the fast path
-    never goes stale (bloom can only be rebuilt).
+    Exact path: one anti-join. Cuckoo path: probe first (or take the
+    ``maybe_col`` flag of a probe that already ran), anti-join only
+    the maybe-seen fraction, union back the definite-new rows —
+    identical results, a fraction of the shuffle. After a registry
+    delete the filter forgets the keys too (S9/T4), so the fast path
+    never goes stale.
 
     Confirm strategy: when the caller knows the maybe-fraction row
     count (``n_maybe``, e.g. observed on an upstream checkpoint) and
@@ -625,16 +437,14 @@ def dedup_new_urls(
     (default 64 MB — the broadcast is replicated per executor, so
     budget it like spark.sql.autoBroadcastJoinThreshold, not like
     heap)."""
-    if bloom_df is None and cuckoo_df is None and maybe_col is None:
+    if cuckoo_df is None and maybe_col is None:
         return candidates.join(seen_urls.select(url_col), url_col, "left_anti")
     if maybe_col is not None:
         # the probe already ran (e.g. inside an upstream checkpointed
         # stage, so the two branches below don't re-execute it)
         flagged = candidates.withColumnRenamed(maybe_col, "maybe_seen")
-    elif cuckoo_df is not None:
-        flagged = cuckoo_probe_sharded(candidates, cuckoo_df, url_col, n_shards)
     else:
-        flagged = bloom_probe_sharded(candidates, bloom_df, url_col, n_shards)
+        flagged = cuckoo_probe_sharded(candidates, cuckoo_df, url_col, n_shards)
     definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
     if (

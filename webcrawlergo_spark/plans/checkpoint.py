@@ -126,7 +126,7 @@ class CheckpointStore:
     def amend(self, table: str, df: DataFrame, tag: str, meta: dict | None = None) -> dict:
         """Atomically repoint ONE snapshot table of the current
         manifest at freshly-written data — the post-commit maintenance
-        path (e.g. a bloom overflow rebuild detected on the commit's
+        path (e.g. a seen-tier overflow rebuild detected on the commit's
         own Observation). Same write-new-then-pointer-flip discipline
         as commit: a crash mid-amend leaves the committed state in
         force, a crash after the flip resumes from the rebuilt data —

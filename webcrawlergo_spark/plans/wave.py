@@ -2,19 +2,21 @@
 the reference's goroutine crawl loop (reference crawler.go:163-332).
 
 Execution model: BFS-by-depth iterative micro-batches ("waves") over
-DataFrames. One wave =
+DataFrames. One wave is a sequence of phases over a ``WaveState``:
 
-  dequeue batch (politeness-capped per host)
-  → global event-rank assignment (plans/rank.py — the FIFO clock)
-  → fetch-sim join against the web index
-  → retry / dead-mark / skip status handling (T3, T4)
-  → link extraction (X1, operators/linkextract.py)
-  → canonicalize (X2 pandas UDF, functions/urlnorm.py)
-  → validate (P7-P14 + robots X3, operators/validate.py)
-  → first-encounter dedup (J2, operators/seenset.py: exact anti-join
-    or bloom-shard prefilter + exact confirm)
-  → state MERGE (urls flags, pages append, seen, invalid)
-  → checkpoint commit + per-partition lineage (T5)
+  politeness cap     dequeue batch (per-host quota, overflow defers)
+  fetch + event rank global event-rank assignment (plans/rank.py — the
+                     FIFO clock) → fetch-sim join against the web index
+                     → retry / dead-mark / skip status handling (T3, T4)
+  extract            link extraction (X1, operators/linkextract.py)
+                     → canonicalize (X2, functions/urlnorm.py)
+                     → validate (P7-P14 + robots X3, operators/validate.py)
+                     (page stats, when on, branch off the fetched pages)
+  seen-set dedup     first-encounter dedup (J2, operators/seenset.py:
+                     exact anti-join, or the ``SeenTier`` cuckoo-shard
+                     prefilter + exact confirm)
+  state merge        urls flags, pages append, seen, invalid, lineage
+  commit             checkpoint commit (T5)
 
 FIFO-order equivalence: the reference's single-worker queue processes
 items in enqueue order; every item enqueued during wave w is
@@ -44,6 +46,7 @@ from __future__ import annotations
 
 from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
 
@@ -51,11 +54,7 @@ from ..functions.urlnorm import host_expr, make_normalize_udf, normalize_expr
 from ..operators.linkextract import extract_links
 from ..operators.sampling import salted_topk_split
 from ..operators.seenset import (
-    DEFAULT_BITS_PER_KEY,
     _cuckoo_buckets_for,
-    bloom_or_shards,
-    bloom_probe_sharded,
-    build_bloom_shards,
     build_cuckoo_shards,
     cuckoo_insert_shards,
     cuckoo_probe_sharded,
@@ -83,12 +82,31 @@ from .rank import with_global_rank, with_host_seq
 # 8-byte longs). P is the classic prime > 2^32; a < 2^29 odd and
 # h < 2^32 keep a·h + b < 2^61 — no BIGINT overflow.
 MINHASH_P = 4294967311
+# permutations in the in-flight content minhash (page_stats mh0..mh7);
+# production ingest pipelines typically carry 32-128
+CONTENT_MINHASH_SEEDS = 8
 # content-signature format version carried in the checkpoint manifest
 # (ADVICE r5): bump whenever the page_stats signature columns change
 # shape/type so a resume across the change fails loudly at load, not
 # at a later multi-file schema merge. 2 = bigint universal-hash
 # minhash (r5); 1/absent = the md5-hex-string era.
 STATS_FORMAT = 2
+# robots_mode="auto" compiles rule sets up to this size into a CASE
+# chain and evaluates bigger ones as a join
+ROBOTS_EXPR_MAX_RULES = 64
+# seen-tier probe tasks = n_shards * PROBE_SALT (each task still holds
+# ONE shard's table)
+PROBE_SALT = 2
+# lineage-truncation cadence (waves) for the slowly growing state and
+# the seen tier's lazy absorb chain when no checkpoint store truncates
+# them: they gain one cheap union/join per wave, and truncating every
+# wave costs more jobs than it saves
+TRUNCATE_EVERY = 4
+# checkpoint table name of the seen tier's shard table
+TIER_TABLE = "cuckoo"
+SEEN_MODES = ("exact", "cuckoo")
+CANONICALIZERS = ("jvm", "pandas")
+ROBOTS_MODES = ("auto", "expr", "join")
 
 
 def minhash_ab(n: int) -> tuple[tuple[int, int], ...]:
@@ -122,16 +140,6 @@ PAGE_STATS_COLS = (
     "fingerprint string, n_media int"
 )
 
-def _bloom_overflow_metric():
-    """Any shard holding more keys than its bits_per_key budget ⇒ FPR
-    past design ⇒ rebuild with headroom. Ridden as an Observation
-    metric on whatever action settles the shard table — never its own
-    job. (A function, not a module constant: building a Column needs
-    an active SparkContext.)"""
-    return F.max(
-        (F.col("n") * F.lit(DEFAULT_BITS_PER_KEY) > F.col("m_bits")).cast("long")
-    ).alias("overflow")
-
 
 @dataclass
 class CrawlConfig:
@@ -142,29 +150,28 @@ class CrawlConfig:
     request_delay_ms: int = 50
     update_days: int = 1
     now_ts: float = 1_700_000_000.0
-    # "exact" | "bloom" | "cuckoo". Bloom = the dense fast path (no
-    # deletion; overflow only degrades FPR, never correctness).
-    # Cuckoo = the DELETABLE tier as a full crawl mode: the same
-    # executor-side shard-table design, but a registry delete between
-    # runs can forget keys (S9/T4) without an O(seen) rebuild. A
-    # cuckoo insert can FAIL at capacity (a potential false negative,
-    # which bloom cannot have), so the wave loop observes max(n_fail)
-    # on the probe's own action and, on any failure, falls back to the
-    # full exact anti-join for that wave and rebuilds the shards with
-    # fresh headroom — correctness never depends on cuckoo sizing.
+    # "exact" | "cuckoo". Cuckoo = the executor-side shard-table tier
+    # (SeenTier): a probe splits the wave's candidates into
+    # definitely-new and maybe-seen, and only the maybe-seen fraction
+    # pays the exact anti-join; a registry delete between runs can
+    # forget keys (S9/T4) without an O(seen) rebuild. A cuckoo insert
+    # can FAIL at capacity (a potential false negative), so the wave
+    # loop observes max(n_fail) on the probe's own action and, on any
+    # failure, falls back to the full exact anti-join for that wave
+    # and rebuilds the shards with fresh headroom — correctness never
+    # depends on cuckoo sizing.
     seen_mode: str = "exact"
     n_shards: int = 16
-    # bloom-mode tuning. The probe pays a fixed cost (a shard-key
-    # shuffle of the wave's candidates + an Arrow round-trip) to avoid
-    # shuffling+sorting the crawl-lifetime seen set; below this seen
-    # size the plain anti-join is cheaper, so bloom mode runs the
-    # exact join and maintains NO shards at all — the driver tracks
+    # Gates the cuckoo probe (the field keeps the bloom_ prefix of the
+    # tier it was first written for). The probe pays a fixed cost (a
+    # shard-key shuffle of the wave's candidates + an Arrow round-trip)
+    # to avoid shuffling+sorting the crawl-lifetime seen set; below
+    # this seen size the plain anti-join is cheaper, so the tier runs
+    # the exact join and maintains NO shards at all — the driver tracks
     # only n_seen_est (an int) and the shard table is built ONCE, from
     # `seen`, the wave the estimate crosses the gate (one O(seen) job
-    # amortized over the whole crawl; the r3 design paid per-wave lazy
-    # OR-in + settle jobs below the gate for shards it never probed —
-    # a measured 26% throughput tax, BENCH_r03). The default is the
-    # measured single-host crossover (BENCH.md §bloom-crossover: at
+    # amortized over the whole crawl). The default is the measured
+    # single-host crossover (BENCH.md, tools/bloom_crossover.py: at
     # 1M-row candidates the memory-local hash anti-join wins below
     # ~4M seen rows; the probe wins above). On a multi-node cluster
     # the anti-join pays a network shuffle+sort of the whole seen set,
@@ -172,24 +179,19 @@ class CrawlConfig:
     # expected wave candidate count there. Parity tests set 0 to
     # force the probe on tiny corpora.
     bloom_probe_min_seen: int = 4_000_000
-    # probe tasks = n_shards * salt (each task still holds ONE blob)
-    bloom_probe_salt: int = 2
-    # capacity floor per shard for the bloom/cuckoo tier builds: a
-    # crawl grows the seen set by orders of magnitude past the seed
-    # list, so sizing off the current count alone forces O(seen)
-    # rebuilds every couple of waves; 64k keys of headroom is ~free
-    # (80 KB/shard bloom, 200 KB/shard cuckoo). Tests shrink it to
-    # force the overflow/rebuild/fallback machinery on tiny corpora.
+    # capacity floor per shard for the cuckoo tier builds: a crawl
+    # grows the seen set by orders of magnitude past the seed list, so
+    # sizing off the current count alone forces O(seen) rebuilds every
+    # couple of waves; 64k keys of headroom is ~free (200 KB/shard).
+    # Tests shrink it to force the overflow/rebuild/fallback machinery
+    # on tiny corpora.
     tier_min_per_shard: int = 64_000
     # shard-count ceiling rule: every (re)build sizes the shard count
     # to max(n_shards, keys/tier_max_keys_per_shard) so one shard's
-    # blob stays task-sized no matter how big the seen set grows —
-    # at the 10^10-key design point a fixed n_shards=16 would mean
-    # ~780 MB bloom blobs per task; with the 50M rule the build picks
-    # 200 shards of ~60 MB. The count is pinned between builds (the
-    # cogrouped probe/absorb must address the table that exists) and
-    # round-trips the checkpoint manifest. Tests shrink it to force
-    # mid-crawl shard-count growth.
+    # blob stays task-sized no matter how big the seen set grows. The
+    # count is pinned between builds (the cogrouped probe/absorb must
+    # address the table that exists) and round-trips the checkpoint
+    # manifest. Tests shrink it to force mid-crawl shard-count growth.
     tier_max_keys_per_shard: int = 50_000_000
     # reference semantics: single-site crawl (P8). False = accept any
     # host — the multi-host frontier mode the 10^10-URL north rule
@@ -212,14 +214,12 @@ class CrawlConfig:
     # rendered content is shorter than this are not saved. Content
     # length = total chars across span text/media_ref fields.
     min_content_chars: int = 0
-    # crawl-time near-dup signatures: adds an N-seed content minhash
-    # (distinct unigram tokens, explode + groupBy-min — map-side
-    # combine) per fetched page to page_stats. The in-flight half of
-    # the training-data dedup pipeline (operators/dedup.py is the
-    # batch half; production ingest pipelines typically carry 32-128
-    # permutations). Requires analyze_pages.
+    # crawl-time near-dup signatures: adds a CONTENT_MINHASH_SEEDS-seed
+    # content minhash (distinct unigram tokens, explode + groupBy-min —
+    # map-side combine) per fetched page to page_stats. The in-flight
+    # half of the training-data dedup pipeline (operators/dedup.py is
+    # the batch half). Requires analyze_pages.
     content_minhash: bool = False
-    content_minhash_seeds: int = 8
     # X3: the UA string grobotstxt group-selection matches against
     # (reference crawler.go:60,442).
     user_agent: str = "webcrawlerGo"
@@ -228,9 +228,8 @@ class CrawlConfig:
     # a few hosts); "join" evaluates relationally against a broadcast
     # rules table (right for a multi-host frontier with many rule
     # sets, where a driver-compiled expression would blow up codegen);
-    # "auto" switches on rule-set size.
+    # "auto" switches on rule-set size (ROBOTS_EXPR_MAX_RULES).
     robots_mode: str = "auto"
-    robots_expr_max_rules: int = 64
     # exact per-request virtual-time politeness (T1 fidelity): when
     # on, every event carries fetch_seq (its 1-based position in its
     # host's wave queue) and virtual_ms (wave base + (seq-1) × delay),
@@ -247,6 +246,16 @@ class CrawlConfig:
         # an empty string would otherwise match every URL (ADVICE r1)
         self.marked_paths = [p for p in self.marked_paths if p]
         self.ignore_patterns = [p for p in self.ignore_patterns if p]
+        for name, allowed in (
+            ("seen_mode", SEEN_MODES),
+            ("canonicalizer", CANONICALIZERS),
+            ("robots_mode", ROBOTS_MODES),
+        ):
+            value = getattr(self, name)
+            if value not in allowed:
+                raise ValueError(f"{name} must be one of {allowed}, got {value!r}")
+        if self.content_minhash and not self.analyze_pages:
+            raise ValueError("content_minhash=True requires analyze_pages=True")
 
 
 @dataclass
@@ -270,8 +279,240 @@ class CrawlResult:
         return [r["url"] for r in self.events.orderBy("event_rank").collect()]
 
 
+@dataclass
+class WaveState:
+    """Everything a wave hands to the next."""
+
+    frontier: DataFrame
+    urls: DataFrame
+    seen: DataFrame
+    # the queue map's *value* side (reference queue/queue.go:15-17) —
+    # shared mutable state, kept as its own table because duplicate
+    # queue occurrences of one URL observe each other's updates
+    fetch_flags: DataFrame
+    invalid: DataFrame
+    # None: no commit read-back truncates lineage, so the loop
+    # checkpoints state itself
+    store: CheckpointStore | None = None
+    event_base: int = 0
+    virtual_base_ms: int = 0
+    wave_id: int = 0
+    # derived from observed counters every wave, never a count() job
+    n_frontier: int = 0
+    # fast-path guards — python-side facts that let a wave skip whole
+    # plan sections (each skipped section = 1-2 jobs/wave): fetch-flag
+    # machinery only matters if some flag can ever be true; the
+    # invalid anti-join only once something is invalid
+    flags_live: bool = False
+    invalid_nonempty: bool = False
+    # append logs accumulate as per-wave deltas — unioned lazily,
+    # checkpointed as deltas (O(wave), not O(history)); a page-stats
+    # entry may still be an in-flight Future of its delta
+    events: list[DataFrame] = field(default_factory=list)
+    pages: list[DataFrame] = field(default_factory=list)
+    lineage: list[DataFrame] = field(default_factory=list)
+    page_stats: list = field(default_factory=list)
+
+    def settle_stats(self, wait: bool) -> None:
+        # a failed stats job raises here: once per wave for the deltas
+        # already finished (so the error surfaces at the wave that
+        # caused it), for all of them after the loop
+        self.page_stats[:] = [
+            d.result() if isinstance(d, Future) and (wait or d.done()) else d
+            for d in self.page_stats
+        ]
+
+
 def _host(col):
     return F.regexp_extract(col, r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#:]+)", 1)
+
+
+def _overflow_metric():
+    """Any FAILED insert (a potential false negative — the wave that
+    observes it must not trust probe negatives) or any shard past its
+    design load (preemptive, before inserts start failing). Ridden as
+    an Observation metric on whatever action reads the shard table —
+    never its own job. (A function, not a module constant: building a
+    Column needs an active SparkContext.)"""
+    return F.max(
+        ((F.col("n_fail") > 0) | (F.col("n") * 100 > F.col("n_buckets") * 4 * 84)).cast("long")
+    ).alias("overflow")
+
+
+def _reread(entry: dict, tables: dict[str, DataFrame], name: str) -> DataFrame:
+    # the commit write already materialized the table: re-reading the
+    # parquet truncates lineage. Passing the written schema keeps the
+    # read-back free of jobs: without it Spark runs a schema-inference
+    # job per read.
+    df = tables[name]
+    return df.sparkSession.read.schema(df.schema).parquet(entry["tables"][name])
+
+
+class SeenTier:
+    """The seen set's approximate tier and all of its policy: sizing,
+    the probe gate, overflow, rebuild and the commit-time amend.
+    ``seen_mode="exact"`` is the tier whose gate never opens: no
+    count, no build, no probe, no commit table."""
+
+    # The cuckoo shard table lives across waves: built once (or
+    # resumed from the checkpoint), then each wave's new keys are
+    # absorbed — O(new), never a per-wave O(seen) rebuild. It is a
+    # DataFrame for its whole life (executor-side tables, cogrouped
+    # probe/absorb in operators/seenset.py); the driver tracks only the
+    # sizing pins and a seen-count estimate for the probe gate, so
+    # nothing driver-side grows with the seen set.
+
+    def __init__(self, cfg: CrawlConfig):
+        self.cfg = cfg
+        self.min_seen = cfg.bloom_probe_min_seen if cfg.seen_mode == "cuckoo" else None
+        self.df: DataFrame | None = None
+        self.chain = 0  # un-settled lazy absorb links
+        self.n_seen_est = 0
+        # sizing pins (shard count + per-shard capacity): set by every
+        # build, resumed from the manifest meta with the table
+        self.shards = cfg.n_shards
+        self.ps = cfg.tier_min_per_shard
+
+    @staticmethod
+    def overflowed(obs: Observation | None) -> bool:
+        return obs is not None and bool(int(obs.get["overflow"] or 0))
+
+    def pins(self) -> dict:
+        return {"tier_shards": self.shards, "tier_ps": self.ps}
+
+    def _gate_open(self) -> bool:
+        return self.min_seen is not None and self.n_seen_est >= self.min_seen
+
+    def load(self, seen: DataFrame, store: CheckpointStore | None) -> None:
+        """Crawl start: resume the table and its sizing pins from
+        ``store``'s latest manifest when it has one, else build the
+        table if ``seen`` already passes the gate."""
+        if self.min_seen is None:
+            return
+        self.n_seen_est = seen.count()
+        loaded = (
+            store.load(seen.sparkSession, TIER_TABLE) if store is not None and store.latest() else None
+        )
+        if loaded is None:
+            self._gate_build(seen)
+            return
+        self.df = loaded  # parquet-backed, already truncated
+        meta = store.latest()["meta"]
+        self.shards = int(meta.get("tier_shards", self.cfg.n_shards))
+        self.ps = int(meta.get("tier_ps", self.cfg.tier_min_per_shard))
+
+    def _gate_build(self, seen: DataFrame) -> None:
+        # Below the gate the tier costs NOTHING over exact: no shards
+        # exist, so there is no per-wave maintenance for a table the
+        # crawl never probes. The wave the estimate crosses the gate
+        # builds the shards once from `seen`.
+        if self.df is None and self._gate_open():
+            self.df = self._build(seen, self.n_seen_est).localCheckpoint(eager=True)
+
+    def _build(self, keys: DataFrame, n_keys: int) -> DataFrame:
+        """A table of ~``n_keys`` keys. Each build re-picks the SHARD
+        COUNT by the keys/shard ceiling rule (keeps one shard's table
+        task-sized at any seen-set scale) and the per-shard capacity
+        with 4× headroom; both are pinned until the next build."""
+        cfg = self.cfg
+        cap = max(cfg.tier_max_keys_per_shard, 1)
+        self.shards = max(cfg.n_shards, (n_keys + cap - 1) // cap)
+        self.ps = max(cfg.tier_min_per_shard, n_keys * 4 // self.shards)
+        return build_cuckoo_shards(keys, n_shards=self.shards, expected_per_shard=self.ps)
+
+    def _rebuild(
+        self, keys: DataFrame, n_keys: int, store: CheckpointStore | None = None, tag: str = ""
+    ) -> None:
+        """ONE O(seen) rebuild with fresh headroom from ``keys``, the
+        whole seen set; with a store, persisted by a manifest amend."""
+        # An in-memory-only rebuild evaporated on kill, so resume
+        # repeated the O(seen) work from a degraded table (ADVICE r3).
+        # The amend's meta carries the rebuilt table's pins, which
+        # _build has already updated.
+        rebuilt = self._build(keys, n_keys)
+        if store is None:
+            self.df = rebuilt.localCheckpoint(eager=True)
+        else:
+            entry = store.amend(TIER_TABLE, rebuilt, tag, meta=self.pins())
+            self.df = keys.sparkSession.read.parquet(entry["tables"][TIER_TABLE])
+        self.chain = 0
+
+    def probe(
+        self, cands: DataFrame, seen: DataFrame, url_col: str
+    ) -> tuple[DataFrame, Observation | None]:
+        """Build the table if the gate just opened, then add
+        ``maybe_seen`` to ``cands``. Returns them with the table's
+        overflow Observation (fires on the caller's action over them),
+        or unflagged with None when the probe does not run."""
+        self._gate_build(seen)
+        if self.df is None or not self._gate_open():
+            return cands, None
+        obs = Observation()
+        self.df = self.df.observe(obs, _overflow_metric())
+        flagged = cuckoo_probe_sharded(
+            cands, self.df, url_col=url_col, n_shards=self.shards, probe_salt=PROBE_SALT
+        )
+        return flagged, obs
+
+    def absorb(
+        self, seen: DataFrame, new_urls: DataFrame, n_new: int, overflowed: bool, settle: bool
+    ) -> None:
+        """Fold a wave's (checkpointed) new URLs into the table, or
+        rebuild it on an overflow. ``seen`` does not include them yet.
+        ``settle`` (no checkpoint store) truncates the absorb chain
+        every TRUNCATE_EVERY waves."""
+        if not overflowed and self.df is not None and n_new:
+            # O(new keys + table bytes), all executor-side: hash
+            # JVM-side, cogroup the wave's keys with the shard table,
+            # each task folds into ONE shard's table. The absorb is
+            # LAZY — it rides the next action that reads the table (the
+            # next wave's probe, the store commit, or the settle below)
+            # instead of paying its own per-wave job.
+            self.df = cuckoo_insert_shards(
+                self.df,
+                new_urls.select("url"),
+                n_shards=self.shards,
+                default_n_buckets=_cuckoo_buckets_for(self.ps),
+            )
+            self.chain += 1
+        if not overflowed and settle and self.df is not None and self.chain >= TRUNCATE_EVERY:
+            # one small job (table rows only) truncates lineage and
+            # carries the overflow check — nothing but one int reaches
+            # the driver. Failed inserts between settles are caught by
+            # the per-probe observation, not this cadence.
+            obs = Observation()
+            self.df = self.df.observe(obs, _overflow_metric()).localCheckpoint(eager=True)
+            self.chain = 0
+            overflowed = self.overflowed(obs)
+        if overflowed:
+            # the wave already deduped exactly, so the rebuild from the
+            # post-wave seen set closes the failed-insert window
+            self._rebuild(seen.unionByName(new_urls.select("url")), self.n_seen_est + n_new)
+        self.n_seen_est += n_new
+
+    def commit(
+        self, store: CheckpointStore, wave_id: int, tables: dict, appends: dict, meta: dict
+    ) -> dict:
+        """Commit a wave's state with the shard table and its sizing
+        pins riding along; amend a rebuilt table on overflow."""
+        # Resume reuses the committed table instead of an O(seen)
+        # rebuild, addressed by the pinned shard count. The commit write
+        # runs any pending lazy absorb links and fires the overflow
+        # metric; an overflow is rebuilt from the committed seen set.
+        obs = None
+        if self.df is not None:
+            obs = Observation()
+            self.df = self.df.observe(obs, _overflow_metric())
+            tables = {**tables, TIER_TABLE: self.df}
+        entry = store.commit(wave_id, tables, appends=appends, meta={**meta, **self.pins()})
+        if obs is not None:
+            self.df = _reread(entry, tables, TIER_TABLE)
+            self.chain = 0
+            if self.overflowed(obs):
+                self._rebuild(
+                    _reread(entry, tables, "seen"), self.n_seen_est, store, f"rebuild={wave_id}"
+                )
+        return entry
 
 
 class CrawlEngine:
@@ -315,7 +556,7 @@ class CrawlEngine:
         self._rules_df = parse_robots_rules(spark, robots_rows, user_agent=config.user_agent)
         rules = self._rules_df.collect()
         use_expr = config.robots_mode == "expr" or (
-            config.robots_mode == "auto" and len(rules) <= config.robots_expr_max_rules
+            config.robots_mode == "auto" and len(rules) <= ROBOTS_EXPR_MAX_RULES
         )
         if use_expr:
             self._robots_ok = robots_ok_expr([tuple(r) for r in rules])
@@ -327,8 +568,6 @@ class CrawlEngine:
             self._normalize = lambda col: udf(col)
         else:
             self._normalize = lambda col: normalize_expr(config.base_url, col)
-
-    # -- state init ---------------------------------------------------------
 
     def _empty(self, schema: str) -> DataFrame:
         return local_df(self.spark, [], schema)
@@ -344,82 +583,13 @@ class CrawlEngine:
         # streaming docs costs no sort at all (guide §3.1).
         return df.hint("shuffle_hash").join(self.docs, "doc_id")
 
-    # -- seen-filter tier dispatch (bloom | cuckoo) -------------------------
-    # One wave-loop code path serves both approximate tiers; these
-    # four hooks are the only mode-dependent pieces. All of them keep
-    # the executor-side discipline: shard tables are DataFrames for
-    # their whole life, the driver holds counts and sizing ints only.
-
-    def _tier_build(self, urls: DataFrame, n_keys: int) -> DataFrame:
-        """(Re)build the shard table from ~``n_keys`` keys. Each build
-        re-picks the SHARD COUNT by the keys/shard ceiling rule
-        (cfg.tier_max_keys_per_shard — keeps one shard's blob
-        task-sized at any seen-set scale) and the per-shard capacity
-        with 4× headroom; both are pinned until the next build (the
-        cogrouped probe/absorb must address the table that exists) and
-        round-trip the checkpoint manifest meta."""
-        cfg = self.cfg
-        cap = max(cfg.tier_max_keys_per_shard, 1)
-        self._tier_shards = max(cfg.n_shards, (n_keys + cap - 1) // cap)
-        self._tier_ps = max(cfg.tier_min_per_shard, n_keys * 4 // self._tier_shards)
-        if cfg.seen_mode == "cuckoo":
-            return build_cuckoo_shards(
-                urls, n_shards=self._tier_shards, expected_per_shard=self._tier_ps
-            )
-        return build_bloom_shards(
-            urls, n_shards=self._tier_shards, expected_per_shard=self._tier_ps
-        )
-
-    def _tier_absorb(self, tier_df: DataFrame, new_urls: DataFrame) -> DataFrame:
-        """Fold a wave's new keys into the shard table (cogrouped,
-        lazy — rides the next action that reads the table)."""
-        if self.cfg.seen_mode == "cuckoo":
-            return cuckoo_insert_shards(
-                tier_df,
-                new_urls,
-                n_shards=self._tier_shards,
-                default_n_buckets=_cuckoo_buckets_for(self._tier_ps),
-            )
-        return bloom_or_shards(
-            tier_df,
-            new_urls,
-            n_shards=self._tier_shards,
-            default_m_bits=self._tier_ps * DEFAULT_BITS_PER_KEY,
-        )
-
-    def _tier_probe(self, candidates: DataFrame, tier_df: DataFrame, url_col: str) -> DataFrame:
-        fn = cuckoo_probe_sharded if self.cfg.seen_mode == "cuckoo" else bloom_probe_sharded
-        return fn(
-            candidates,
-            tier_df,
-            url_col=url_col,
-            n_shards=self._tier_shards,
-            probe_salt=self.cfg.bloom_probe_salt,
-        )
-
-    def _tier_overflow_metric(self):
-        """Bloom: any shard past its bits/key budget (FPR degraded —
-        costs confirm work, never correctness). Cuckoo: any FAILED
-        insert (a potential false negative — the wave that observes it
-        must not trust probe negatives) or any shard past its design
-        load (preemptive, before inserts start failing)."""
-        if self.cfg.seen_mode == "cuckoo":
-            return F.max(
-                (
-                    (F.col("n_fail") > 0)
-                    | (F.col("n") * 100 > F.col("n_buckets") * 4 * 84)
-                ).cast("long")
-            ).alias("overflow")
-        return _bloom_overflow_metric()
+    # -- load / seed ----------------------------------------------------------
 
     def _seed_frontier(
         self, resume_urls: DataFrame | None
     ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
         """Returns (frontier, urls, seen, fetch_flags) mirroring
-        beginCrawl + loadUrlsToQueue. ``fetch_flags`` is the queue
-        map's *value* side (reference queue/queue.go:15-17) — shared
-        mutable state, kept as its own table because duplicate queue
-        occurrences of one URL observe each other's updates."""
+        beginCrawl + loadUrlsToQueue."""
         cfg = self.cfg
         spark = self.spark
         base = cfg.base_url.rstrip("/")
@@ -498,69 +668,17 @@ class CrawlEngine:
         )
         return seed_frontier.unionByName(resume_frontier), urls, seen, fetch_flags
 
-    # -- the wave loop ------------------------------------------------------
-
-    def run(
-        self,
-        resume_urls: DataFrame | None = None,
-        resume: bool = False,
-        extra_frontier: DataFrame | None = None,
-        debug_timing: bool = False,
-    ) -> CrawlResult:
-        """``extra_frontier``: bulk seed rows in FRONTIER_COLS shape
-        (url, host, depth, parent_rank, span_offset, link_pos,
-        should_fetch, retry_count) — the "seed list" path for
-        multi-seed frontiers; rows order after the base seed via
-        their (parent_rank, span_offset) keys."""
-        # Crawl-time analytics (the page_stats branch) depend only on
-        # the wave's already-checkpointed `sim` + the static docs
-        # table — they are independent of the NEXT wave's work. A
-        # 1-worker pool materializes each wave's stats delta in the
-        # background so its jobs back-fill executor slots during the
-        # next wave's driver-bound phases (guide §2.6 "overlap
-        # independent jobs") instead of accumulating into one big
-        # serial tail job after the loop (measured: ~15 s of a 82 s
-        # 2M-page leg). One worker bounds contention; FIFO scheduling
-        # lets wave jobs continue to grab freed slots. The pool is shut
-        # down however the loop ends; a wave that raises drops the
-        # stats jobs still queued.
-        stats_pool = ThreadPoolExecutor(max_workers=1) if self.cfg.analyze_pages else None
-        try:
-            return self._run(stats_pool, resume_urls, resume, extra_frontier, debug_timing)
-        finally:
-            if stats_pool is not None:
-                stats_pool.shutdown(cancel_futures=True)
-
-    def _run(
-        self,
-        stats_pool: ThreadPoolExecutor | None,
-        resume_urls: DataFrame | None,
-        resume: bool,
-        extra_frontier: DataFrame | None,
-        debug_timing: bool,
-    ) -> CrawlResult:
+    def _load(
+        self, store: CheckpointStore | None, resume: bool,
+        resume_urls: DataFrame | None, extra_frontier: DataFrame | None,
+    ) -> WaveState:
+        """The state the crawl starts from: the latest checkpoint when
+        resuming from one, else the seed (plus resume registry rows and
+        bulk seed rows)."""
         cfg = self.cfg
         spark = self.spark
-        store = CheckpointStore(cfg.checkpoint_dir) if cfg.checkpoint_dir else None
-
-        # append-only logs accumulate as per-wave deltas — unioned
-        # lazily, checkpointed as deltas (O(wave), not O(history))
-        events_deltas: list[DataFrame] = []
-        pages_deltas: list[DataFrame] = []
-        lineage_deltas: list[DataFrame] = []
-        page_stats_deltas: list = []  # DataFrames or in-flight Futures of them
-
-        def settle_stats(wait: bool) -> None:
-            # a failed stats job raises here: once per wave for the
-            # deltas already finished (so the error surfaces at the
-            # wave that caused it), for all of them after the loop
-            page_stats_deltas[:] = [
-                d.result() if isinstance(d, Future) and (wait or d.done()) else d
-                for d in page_stats_deltas
-            ]
-
-        if resume and store and store.latest():
-            m = store.latest()
+        m = store.latest() if (resume and store) else None
+        if m:
             fmt = int((m.get("meta") or {}).get("stats_format", 1))
             if cfg.analyze_pages and cfg.content_minhash and fmt != STATS_FORMAT:
                 raise RuntimeError(
@@ -569,18 +687,17 @@ class CrawlEngine:
                     "signatures, r5); discard the checkpoint or re-crawl — "
                     "resuming would mix signature column types (ADVICE r5)"
                 )
-            frontier = store.load(spark, "frontier")
-            urls = store.load(spark, "urls")
-            seen = store.load(spark, "seen")
-            fetch_flags = store.load(spark, "fetch_flags")
-            invalid = store.load(spark, "invalid")
-            for deltas, name in ((events_deltas, "events"), (pages_deltas, "pages"), (lineage_deltas, "lineage")):
+            st = WaveState(
+                *(store.load(spark, n) for n in ("frontier", "urls", "seen", "fetch_flags", "invalid")),
+                store=store,
+                event_base=int(m["meta"]["event_base"]),
+                virtual_base_ms=int(m["meta"].get("virtual_base_ms", 0)),
+                wave_id=int(m["wave_id"]) + 1,
+            )
+            for deltas, name in ((st.events, "events"), (st.pages, "pages"), (st.lineage, "lineage")):
                 prior = store.load(spark, name)
                 if prior is not None:
                     deltas.append(prior)
-            event_base = int(m["meta"]["event_base"])
-            virtual_base_ms = int(m["meta"].get("virtual_base_ms", 0))
-            wave_id = int(m["wave_id"]) + 1
         else:
             frontier, urls, seen, fetch_flags = self._seed_frontier(resume_urls)
             if extra_frontier is not None:
@@ -599,821 +716,659 @@ class CrawlEngine:
                         F.lit(True).alias("is_alive"), F.lit(None).cast("double").alias("last_saved"),
                     ).join(urls.select("url"), "url", "left_anti")
                 )
-            invalid = self._empty(URL_COLS)
-            event_base = 0
-            virtual_base_ms = 0
-            wave_id = 0
-        # fast-path guards — python-side facts that let a wave skip
-        # whole plan sections (each skipped section = 1-2 jobs/wave):
-        # fetch-flag machinery only matters if some flag can ever be
-        # true; the invalid anti-join only once something is invalid
-        flags_live = bool(cfg.marked_paths) or fetch_flags.filter(F.col("flag")).limit(1).count() > 0
-        invalid_nonempty = invalid.limit(1).count() > 0
-        truncate_every = 4  # lineage-truncation cadence for slow-growing state
-        # frontier size for wave 0 — every later wave derives it from
-        # observed counters (n_retries + n_deferred + n_enqueued), so
-        # the per-wave frontier.count() job disappears
-        n_frontier = frontier.count()
+            st = WaveState(frontier, urls, seen, fetch_flags, self._empty(URL_COLS), store=store)
+        st.flags_live = (
+            bool(cfg.marked_paths) or st.fetch_flags.filter(F.col("flag")).limit(1).count() > 0
+        )
+        st.invalid_nonempty = st.invalid.limit(1).count() > 0
+        # wave 0's frontier size — every later wave derives it from
+        # observed counters (n_retries + n_deferred + n_enqueued)
+        st.n_frontier = st.frontier.count()
+        return st
 
-        # approximate seen-filter tier (bloom or cuckoo) lives across
-        # waves: built once (or resumed from the checkpoint), then
-        # incrementally absorbed per wave — the r1 version rebuilt from
-        # the FULL seen set every wave, O(seen) instead of O(new). The
-        # shard table is a DATAFRAME for its whole life (executor-side
-        # blobs, cogrouped probe/absorb in operators/seenset.py); the
-        # driver tracks only two ints — the shard sizing and a
-        # seen-count estimate for the probe gate. The r2 design held a
-        # driver dict and broadcast it whole to every executor:
-        # ~12.5 GB per node at the 10^10-URL design point. Now nothing
-        # driver-side grows with the seen set.
-        tier_on = cfg.seen_mode in ("bloom", "cuckoo")
-        is_cuckoo = cfg.seen_mode == "cuckoo"
-        tier_df: DataFrame | None = None
-        tier_chain = 0  # un-settled lazy absorb links
-        n_seen_est = 0
-        # sizing pins (shard count + per-shard capacity) — set by
-        # _tier_build, resumed from the manifest meta with the blobs
-        self._tier_shards = cfg.n_shards
-        self._tier_ps = cfg.tier_min_per_shard
-        if tier_on:
-            n_seen_est = seen.count()
-            loaded = (
-                store.load(spark, cfg.seen_mode)
-                if (resume and store and store.latest())
-                else None
-            )
-            if loaded is not None:
-                tier_df = loaded  # parquet-backed, already truncated
-                meta = store.latest()["meta"]
-                self._tier_shards = int(meta.get("tier_shards", cfg.n_shards))
-                self._tier_ps = int(meta.get("tier_ps", cfg.tier_min_per_shard))
-            elif n_seen_est >= cfg.bloom_probe_min_seen:
-                tier_df = self._tier_build(seen, n_seen_est).localCheckpoint(eager=True)
-            # else: DEFERRED. Below the probe gate the tier costs
-            # NOTHING over exact (r3 paid per-wave OR-in + settle jobs
-            # for shards the run never probed — a measured 26% tax);
-            # the gate-crossing build inside the loop constructs the
-            # shards once from `seen` when the estimate gets there.
+    # -- the wave loop ------------------------------------------------------
 
-        import time as _time
-
-        def _tick(label, _last=[None]):
-            if debug_timing:
-                now = _time.time()
-                if _last[0] is not None:
-                    print(f"    {label}: {now - _last[0]:.2f}s", flush=True)
-                _last[0] = now
-
-        while wave_id < cfg.max_waves:
-            _tick(None)
-            settle_stats(wait=False)
-            if n_frontier == 0:
-                break
-            # politeness cap (T1): per-host quota, overflow defers.
-            # Two-phase salted top-K (operators/sampling.py::
-            # salted_topk_split — shared with stratified sampling): a
-            # mega-host (the bench corpus puts 25% of the frontier on
-            # one) would serialize a plain Window.partitionBy(host)
-            # into one straggler task; phase 1 ranks within
-            # (host, salt) — n_salt-way parallel even for one host —
-            # phase 2 ranks only the bounded survivors. Identical
-            # selection, bounded partitions.
-            if cfg.politeness_max_per_host_per_wave is not None:
-                cap = cfg.politeness_max_per_host_per_wave
-                order = [F.col("parent_rank"), F.col("span_offset"), F.col("link_pos")]
-                top, over = salted_topk_split(
-                    frontier, ["host"], order, cap, salt_on=F.col("url")
-                )
-                # ONE materialization of the split, tagged by `_in`: the
-                # batch size, the sim checkpoint and the next frontier
-                # (`deferred`) all read it, and each read of a lazy split
-                # would re-run the salted windows. The batch size rides
-                # the checkpoint as an Observation.
-                obs_split = Observation()
-                split = (
-                    top.drop("rk").withColumn("_in", F.lit(True))
-                    .unionByName(over.withColumn("_in", F.lit(False)))
-                    .observe(obs_split, F.sum(F.col("_in").cast("long")).alias("n_in"))
-                    .localCheckpoint(eager=True)
-                )
-                n_events = int(obs_split.get["n_in"] or 0)
-                n_deferred = n_frontier - n_events
-                batch = split.filter(F.col("_in")).drop("_in")
-                deferred = split.filter(~F.col("_in")).drop("_in")
-            else:
-                batch, deferred = frontier, self._empty(FRONTIER_COLS)
-                n_events = n_frontier
-                n_deferred = 0
-
-            # fetch step (S1). Two modes behind one column contract:
-            # fetch-sim JOINS the web_index (1:1 left joins don't
-            # disturb ordering), so the rank's materialization and the
-            # sim checkpoint are one pass over one wide frame; the
-            # REAL fetcher (operators/fetch.py) passes fetch columns
-            # through inline from mapInPandas — same columns, plus the
-            # content itself ("spans") riding the fetch event instead
-            # of a doc_id join (what a crawler actually transports).
-            def _with_flag_in(df):
-                # shared by both fetch modes (depends only on "url")
-                if flags_live:
-                    return df.join(
-                        fetch_flags.withColumnRenamed("flag", "_flag_in"), "url", "left"
+    def run(
+        self,
+        resume_urls: DataFrame | None = None,
+        resume: bool = False,
+        extra_frontier: DataFrame | None = None,
+    ) -> CrawlResult:
+        """``extra_frontier``: bulk seed rows in FRONTIER_COLS shape
+        (url, host, depth, parent_rank, span_offset, link_pos,
+        should_fetch, retry_count) — the "seed list" path for
+        multi-seed frontiers; rows order after the base seed via
+        their (parent_rank, span_offset) keys."""
+        cfg = self.cfg
+        store = CheckpointStore(cfg.checkpoint_dir) if cfg.checkpoint_dir else None
+        # Crawl-time analytics (the page_stats branch) depend only on
+        # the wave's already-checkpointed `sim` + the static docs
+        # table — they are independent of the NEXT wave's work. A
+        # 1-worker pool materializes each wave's stats delta in the
+        # background so its jobs back-fill executor slots during the
+        # next wave's driver-bound phases (guide §2.6 "overlap
+        # independent jobs") instead of accumulating into one big
+        # serial tail job after the loop (measured: ~15 s of a 82 s
+        # 2M-page leg). One worker bounds contention; FIFO scheduling
+        # lets wave jobs continue to grab freed slots. The pool is shut
+        # down however the loop ends; a wave that raises drops the
+        # stats jobs still queued.
+        stats_pool = ThreadPoolExecutor(max_workers=1) if cfg.analyze_pages else None
+        try:
+            st = self._load(store, resume, resume_urls, extra_frontier)
+            self.tier = SeenTier(cfg)
+            self.tier.load(st.seen, store if resume else None)
+            while st.wave_id < cfg.max_waves:
+                st.settle_stats(wait=False)
+                if st.n_frontier == 0:
+                    break
+                batch, deferred, n_events = self._politeness_cap(st)
+                sim, n_retries = self._fetch(st, batch, n_events)
+                wave_events = self._record_events(st, sim, n_events)
+                ok = sim.filter(~F.col("transport_fail") & (F.col("http_status") == 200))
+                if stats_pool is not None:
+                    stats = self._page_stats(ok)
+                    st.page_stats.append(
+                        stats_pool.submit(lambda df=stats: df.localCheckpoint(eager=True))
                     )
-                return df.withColumn("_flag_in", F.lit(False))
+                grouped, probe_obs, confirm = self._extract(st, ok)
+                firsts, new_urls, n_new = self._dedup(st, grouped, probe_obs, confirm)
+                n_carried = n_retries + (st.n_frontier - n_events) + n_new
+                wave_pages, lin = self._merge(st, sim, ok, deferred, firsts, new_urls, n_carried)
+                if store is not None:
+                    self._commit(st, {"events": wave_events, "pages": wave_pages, "lineage": lin})
+                st.wave_id += 1
+            # the last wave's delta may still be running — its job
+            # overlapped the loop's tail phases
+            st.settle_stats(wait=True)
+        finally:
+            if stats_pool is not None:
+                stats_pool.shutdown(cancel_futures=True)
+        return self._result(st)
 
-            if self.fetcher is not None:
-                fr = _with_flag_in(self.fetcher(batch))
-                sim = fr.select(
-                    *[F.col(c) for c in batch.columns],
-                    "doc_id",
-                    "http_status",
-                    # real transport outcomes replace the sim's derived
-                    # retry_count < fail_times rule below
-                    F.col("transport_fail").alias("_tfail"),
-                    "spans",
-                    F.coalesce(F.col("_flag_in"), F.lit(False)).alias("flag_in"),
-                )
-            else:
-                web = self.web_index.select(
-                    "url", F.col("doc_id").alias("_doc_id"),
-                    F.col("status").alias("_status"), F.col("fail_times").alias("_ft"),
-                )
-                # SHUFFLE_HASH, build = the (pre-partitioned) index
-                # side: sheds the per-wave sort of both sides; the
-                # index's exchange is already shed by the one-time
-                # repartition in __init__ (left-outer + build-right
-                # is a supported shuffled-hash shape)
-                sim = _with_flag_in(batch.join(web.hint("shuffle_hash"), "url", "left"))
-                sim = sim.select(
-                    *[F.col(c) for c in batch.columns],
-                    F.col("_doc_id").alias("doc_id"),
-                    F.coalesce(F.col("_status"), F.lit(404)).alias("http_status"),
-                    F.coalesce(F.col("_ft"), F.lit(0)).alias("fail_times"),
-                    F.coalesce(F.col("_flag_in"), F.lit(False)).alias("flag_in"),
-                )
-            # FIFO clock: global event ranks for this wave
-            sim = with_global_rank(
-                sim, ["parent_rank", "span_offset", "link_pos"], "event_rank",
-                start=event_base, n_rows=n_events,
-            )
-            event_base += n_events
-            if self.fetcher is not None:
-                sim = sim.withColumnRenamed("_tfail", "transport_fail")
-            else:
-                sim = sim.withColumn(
-                    "transport_fail", F.col("retry_count") < F.col("fail_times")
-                )
-            if flags_live:
-                # the map value a dequeue observes: entering flag, unless
-                # an earlier event of the same URL *this wave* consumed it
-                # (a 200 fetch saves+resets, a transport failure
-                # InsertForce-resets; 404/skip leave it untouched)
-                w_url = Window.partitionBy("url").orderBy("event_rank").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-                consuming = (F.col("transport_fail") | (F.col("http_status") == 200)).cast("long")
-                sim = sim.withColumn(
-                    "flag_at",
-                    F.col("flag_in") & (F.coalesce(F.sum(consuming).over(w_url), F.lit(0)) == 0),
-                )
-            else:
-                sim = sim.withColumn("flag_at", F.lit(False))
-            # piggyback the retry count on the checkpoint action — the
-            # observed metric replaces a whole count() job next wave
-            obs_sim = Observation()
-            sim = sim.observe(
-                obs_sim,
-                F.sum(
-                    (
-                        F.col("transport_fail") & (F.col("retry_count") < F.lit(cfg.retry_times))
-                    ).cast("long")
-                ).alias("n_retries"),
-            )
-            # WIDTH RESTORE before the checkpoint (fetch-sim mode):
-            # sim rows are tiny (url + ids — the spans only attach
-            # downstream via the doc_id join), so AQE's size-based
-            # coalescing collapses a 100k-row wave to 1-4 partitions
-            # ... and every downstream map stage (the spans join, the
-            # link-extract regex, canonicalize, validate — the crawl's
-            # dominant cost) inherits that width. Measured: extract+
-            # norm+judge wall tracked sim's partition count, not the
-            # wave's row count (85k pages on 1 partition = 10.4 s; the
-            # same wave at 32 = 3.3 s; whole crawl 41 s → 33 s).
-            # Repartitioning the ~100 B rows is one trivial shuffle;
-            # tiny end-of-crawl waves stay narrow via the row gate.
-            # Real-fetch mode: its sim carries the fetched spans
-            # INLINE (a width restore shuffles full page content) and
-            # a multi-host frontier is already wide from the pre-fetch
-            # repartition(host) — so no restore there. EXCEPT the
-            # single-host crawl (the reference's default mode): there
-            # repartition(host) is necessarily ONE task — correct for
-            # the fetch itself (per-host politeness serializes the
-            # wire anyway) but nothing says the extract must stay
-            # serial; one bounded shuffle of the wave's fetched
-            # content buys full-width regex/canonicalize work.
-            # r6: only the SMALL_BATCH rank path needs the restore —
-            # above it, with_global_rank's explicit repartitionByRange
-            # (user-specified partition count, exempt from AQE
-            # coalescing) already pinned the wave at full width, and
-            # the extra round-robin exchange re-shuffled ~1M rows per
-            # big wave for nothing.
-            width = min(
-                spark.sparkContext.defaultParallelism,
-                max(1, n_events // 1000),
-            )
-            if (self.fetcher is None or cfg.same_host_only) and n_events <= RANK_SMALL_BATCH:
-                sim = sim.repartition(width)
-            sim = sim.localCheckpoint(eager=True)
-            n_retries = int(obs_sim.get["n_retries"] or 0)
-            if debug_timing:
-                print(
-                    f"    sim: {sim.rdd.getNumPartitions()} partitions,"
-                    f" {n_events} rows",
-                    flush=True,
-                )
-            _tick("rank+fetchsim")
+    def _politeness_cap(self, st: WaveState) -> tuple[DataFrame, DataFrame, int]:
+        """Politeness cap (T1): per-host quota, overflow defers to the
+        next wave. Returns (batch, deferred, batch size)."""
+        cap = self.cfg.politeness_max_per_host_per_wave
+        if cap is None:
+            return st.frontier, self._empty(FRONTIER_COLS), st.n_frontier
+        # Two-phase salted top-K (operators/sampling.py::
+        # salted_topk_split — shared with stratified sampling): a
+        # mega-host (the bench corpus puts 25% of the frontier on
+        # one) would serialize a plain Window.partitionBy(host)
+        # into one straggler task; phase 1 ranks within
+        # (host, salt) — n_salt-way parallel even for one host —
+        # phase 2 ranks only the bounded survivors. Identical
+        # selection, bounded partitions.
+        order = [F.col("parent_rank"), F.col("span_offset"), F.col("link_pos")]
+        top, over = salted_topk_split(st.frontier, ["host"], order, cap, salt_on=F.col("url"))
+        # ONE materialization of the split, tagged by `_in`: the batch
+        # size, the sim checkpoint and the next frontier (`deferred`)
+        # all read it, and each read of a lazy split would re-run the
+        # salted windows. The batch size rides the checkpoint as an
+        # Observation.
+        obs_split = Observation()
+        split = (
+            top.drop("rk").withColumn("_in", F.lit(True))
+            .unionByName(over.withColumn("_in", F.lit(False)))
+            .observe(obs_split, F.sum(F.col("_in").cast("long")).alias("n_in"))
+            .localCheckpoint(eager=True)
+        )
+        n_events = int(obs_split.get["n_in"] or 0)
+        return (
+            split.filter(F.col("_in")).drop("_in"),
+            split.filter(~F.col("_in")).drop("_in"),
+            n_events,
+        )
 
-            retries = (
-                sim.filter(F.col("transport_fail") & (F.col("retry_count") < F.lit(cfg.retry_times)))
-                .select(
-                    "url", "host", "depth",
-                    F.col("event_rank").alias("parent_rank"),
-                    F.lit(-1).alias("span_offset"), F.lit(0).alias("link_pos"),
-                    F.lit(False).alias("should_fetch"),  # InsertForce resets the map value (queue/queue.go:124)
-                    (F.col("retry_count") + 1).alias("retry_count"),
-                )
-            )
-            ok = sim.filter(~F.col("transport_fail") & (F.col("http_status") == 200))
-            dead = sim.filter(~F.col("transport_fail") & (F.col("http_status") == 404)).select("url")
+    def _with_flag_in(self, st: WaveState, df: DataFrame) -> DataFrame:
+        # shared by both fetch modes (depends only on "url")
+        if st.flags_live:
+            return df.join(st.fetch_flags.withColumnRenamed("flag", "_flag_in"), "url", "left")
+        return df.withColumn("_flag_in", F.lit(False))
 
-            status_col = (
-                F.when(F.col("transport_fail"), "fail")
-                .when(F.col("http_status") == 200, "ok")
-                .when(F.col("http_status") == 404, "notfound")
-                .otherwise("skip")
-                .alias("status")
+    def _fetch(self, st: WaveState, batch: DataFrame, n_events: int) -> tuple[DataFrame, int]:
+        """Fetch + event rank: the wave's fetch events with their global
+        FIFO ranks, status columns and the map value each dequeue
+        observes, materialized once. Returns (sim, n_retries)."""
+        cfg = self.cfg
+        # fetch step (S1). Two modes behind one column contract:
+        # fetch-sim JOINS the web_index (1:1 left joins don't
+        # disturb ordering), so the rank's materialization and the
+        # sim checkpoint are one pass over one wide frame; the
+        # REAL fetcher (operators/fetch.py) passes fetch columns
+        # through inline from mapInPandas — same columns, plus the
+        # content itself ("spans") riding the fetch event instead
+        # of a doc_id join (what a crawler actually transports).
+        if self.fetcher is not None:
+            sim = self._with_flag_in(st, self.fetcher(batch)).select(
+                *[F.col(c) for c in batch.columns],
+                "doc_id",
+                "http_status",
+                # real transport outcomes replace the sim's derived
+                # retry_count < fail_times rule below
+                F.col("transport_fail").alias("_tfail"),
+                "spans",
+                F.coalesce(F.col("_flag_in"), F.lit(False)).alias("flag_in"),
             )
-            if cfg.virtual_time_exact:
-                # per-request politeness clock: seq within (wave, host),
-                # virtual offset (seq-1) × delay from the wave's virtual
-                # base; the wave's virtual duration is its busiest
-                # host's queue drained at one request per delay
-                # one eager materialization carries the wave's max seq
-                # as an Observation metric — the host-seq window runs
-                # exactly once (a separate agg job would re-execute it)
-                obs_vt = Observation()
-                seqd = (
-                    with_host_seq(
-                        sim, "host", ["event_rank"], "fetch_seq", n_rows=n_events
-                    )
-                    .observe(obs_vt, F.max("fetch_seq").alias("mx"))
-                    .localCheckpoint(eager=True)
-                )
-                wave_events = seqd.select(
-                    "event_rank", F.lit(wave_id).alias("wave_id"), "url", status_col,
-                    "fetch_seq",
-                    (
-                        F.lit(virtual_base_ms)
-                        + (F.col("fetch_seq") - 1) * F.lit(cfg.request_delay_ms)
-                    ).cast("long").alias("virtual_ms"),
-                )
-                virtual_base_ms += int(obs_vt.get["mx"] or 0) * cfg.request_delay_ms
-            else:
-                wave_events = sim.select(
-                    "event_rank", F.lit(wave_id).alias("wave_id"), "url", status_col,
-                    F.lit(None).cast("long").alias("fetch_seq"),
-                    F.lit(None).cast("long").alias("virtual_ms"),
-                )
-            events_deltas.append(wave_events)
+        else:
+            web = self.web_index.select(
+                "url", F.col("doc_id").alias("_doc_id"),
+                F.col("status").alias("_status"), F.col("fail_times").alias("_ft"),
+            )
+            # SHUFFLE_HASH, build = the (pre-partitioned) index
+            # side: sheds the per-wave sort of both sides; the
+            # index's exchange is already shed by the one-time
+            # repartition in __init__ (left-outer + build-right
+            # is a supported shuffled-hash shape)
+            sim = self._with_flag_in(st, batch.join(web.hint("shuffle_hash"), "url", "left"))
+            sim = sim.select(
+                *[F.col(c) for c in batch.columns],
+                F.col("_doc_id").alias("doc_id"),
+                F.coalesce(F.col("_status"), F.lit(404)).alias("http_status"),
+                F.coalesce(F.col("_ft"), F.lit(0)).alias("fail_times"),
+                F.coalesce(F.col("_flag_in"), F.lit(False)).alias("flag_in"),
+            )
+        # FIFO clock: global event ranks for this wave
+        sim = with_global_rank(
+            sim, ["parent_rank", "span_offset", "link_pos"], "event_rank",
+            start=st.event_base, n_rows=n_events,
+        )
+        st.event_base += n_events
+        if self.fetcher is not None:
+            sim = sim.withColumnRenamed("_tfail", "transport_fail")
+        else:
+            sim = sim.withColumn("transport_fail", F.col("retry_count") < F.col("fail_times"))
+        if st.flags_live:
+            # the map value a dequeue observes: entering flag, unless
+            # an earlier event of the same URL *this wave* consumed it
+            # (a 200 fetch saves+resets, a transport failure
+            # InsertForce-resets; 404/skip leave it untouched)
+            w_url = Window.partitionBy("url").orderBy("event_rank").rowsBetween(
+                Window.unboundedPreceding, -1
+            )
+            consuming = (F.col("transport_fail") | (F.col("http_status") == 200)).cast("long")
+            sim = sim.withColumn(
+                "flag_at",
+                F.col("flag_in") & (F.coalesce(F.sum(consuming).over(w_url), F.lit(0)) == 0),
+            )
+        else:
+            sim = sim.withColumn("flag_at", F.lit(False))
+        # piggyback the retry count on the checkpoint action — the
+        # observed metric replaces a whole count() job next wave
+        obs_sim = Observation()
+        sim = sim.observe(
+            obs_sim,
+            F.sum(
+                (F.col("transport_fail") & (F.col("retry_count") < F.lit(cfg.retry_times))).cast("long")
+            ).alias("n_retries"),
+        )
+        # WIDTH RESTORE before the checkpoint (fetch-sim mode):
+        # sim rows are tiny (url + ids — the spans only attach
+        # downstream via the doc_id join), so AQE's size-based
+        # coalescing collapses a 100k-row wave to 1-4 partitions
+        # ... and every downstream map stage (the spans join, the
+        # link-extract regex, canonicalize, validate — the crawl's
+        # dominant cost) inherits that width. Measured: extract+
+        # norm+judge wall tracked sim's partition count, not the
+        # wave's row count (85k pages on 1 partition = 10.4 s; the
+        # same wave at 32 = 3.3 s; whole crawl 41 s → 33 s).
+        # Repartitioning the ~100 B rows is one trivial shuffle;
+        # tiny end-of-crawl waves stay narrow via the row gate.
+        # Real-fetch mode: its sim carries the fetched spans
+        # INLINE (a width restore shuffles full page content) and
+        # a multi-host frontier is already wide from the pre-fetch
+        # repartition(host) — so no restore there. EXCEPT the
+        # single-host crawl (the reference's default mode): there
+        # repartition(host) is necessarily ONE task — correct for
+        # the fetch itself (per-host politeness serializes the
+        # wire anyway) but nothing says the extract must stay
+        # serial; one bounded shuffle of the wave's fetched
+        # content buys full-width regex/canonicalize work.
+        # r6: only the SMALL_BATCH rank path needs the restore —
+        # above it, with_global_rank's explicit repartitionByRange
+        # (user-specified partition count, exempt from AQE
+        # coalescing) already pinned the wave at full width, and
+        # the extra round-robin exchange re-shuffled ~1M rows per
+        # big wave for nothing.
+        width = min(self.spark.sparkContext.defaultParallelism, max(1, n_events // 1000))
+        if (self.fetcher is None or cfg.same_host_only) and n_events <= RANK_SMALL_BATCH:
+            sim = sim.repartition(width)
+        sim = sim.localCheckpoint(eager=True)
+        return sim, int(obs_sim.get["n_retries"] or 0)
 
-            # X1 + X2: extract → canonicalize → split empty/known-invalid.
-            # The explode multiplies rows ~links-per-page ×, but AQE has
-            # already coalesced upstream partitions to its advisory size
-            # — redistribute so canonicalize/validate run at full width.
-            raw_links = extract_links(
-                self._with_spans(ok).select("url", "event_rank", "depth", "spans"),
-                id_cols=["url", "event_rank", "depth"],
-            ).withColumnRenamed("url", "parent_url")
-
-            if cfg.analyze_pages:
-                text = F.concat_ws(
-                    " ",
-                    F.transform(
-                        F.filter("spans", lambda s: s["kind"] == "text"), lambda s: s["text"]
-                    ),
-                )
-                toks = F.split(text, " ")
-                fetched_docs = self._with_spans(ok)
-                stats = fetched_docs.select(
-                    "url",
-                    "event_rank",
-                    F.length(text).alias("n_chars"),
-                    F.size(toks).alias("n_tokens"),
-                    F.size(F.filter(toks, lambda t: t.startswith("w1"))).alias("marker_hits"),
-                    F.md5(text).alias("fingerprint"),
-                    F.size(F.filter("spans", lambda s: s["kind"] == "media")).alias("n_media"),
-                )
-                if cfg.content_minhash:
-                    # in-flight near-dup signatures: 8-seed minhash over
-                    # the distinct UNIGRAM token set (the batch pipeline
-                    # in operators/dedup.py uses 3-gram shingles for
-                    # precision; the in-flight tier trades n-gram
-                    # context for a single-split plan). Shape matters:
-                    # a SEPARATE narrow branch joined back on the page
-                    # key, tokens exploded once, mins aggregated with
-                    # map-side combine. Higher-order-function shingling
-                    # here re-evaluated split(text) per element_at — the
-                    # HOF path is interpreted with NO common-subexpr
-                    # elimination (measured 10× wall blowup).
-                    # ONE md5 per token, N integer permutations of it
-                    # (module docstring at minhash_ab) — never N md5s
-                    # r6: the exploded token rows carry ONLY the 8-byte
-                    # event_rank (the wave's unique page key — a global
-                    # row_number) instead of (url, event_rank): the
-                    # ~40-byte url string multiplied by ~tokens-per-page
-                    # dominated the aggregate's hash/partial-agg bytes;
-                    # url re-attaches via the stats join below. Same
-                    # groups (event_rank is unique), same mins.
-                    mh = (
-                        fetched_docs.select(
-                            "event_rank",
-                            F.explode_outer(F.array_distinct(F.split(text, " "))).alias("_g"),
-                        )
-                        .select(
-                            "event_rank",
-                            F.conv(F.substring(F.md5("_g"), 1, 8), 16, 10)
-                            .cast("bigint")
-                            .alias("_h"),
-                        )
-                        .groupBy("event_rank")
-                        .agg(
-                            *[
-                                F.min(
-                                    (F.lit(a) * F.col("_h") + F.lit(b))
-                                    % F.lit(MINHASH_P)
-                                ).alias(f"mh{i}")
-                                for i, (a, b) in enumerate(
-                                    minhash_ab(cfg.content_minhash_seeds)
-                                )
-                            ]
-                        )
-                    )
-                    # SHUFFLE_HASH, build = the narrow mh side: the
-                    # groupBy's own hash(event_rank) output feeds the
-                    # join exchange-free, and neither side pays a sort
-                    mh_cols = [f"mh{i}" for i in range(cfg.content_minhash_seeds)]
-                    stats = stats.join(mh.hint("shuffle_hash"), "event_rank").select(
-                        "url", "event_rank", "n_chars", "n_tokens",
-                        "marker_hits", "fingerprint", "n_media", *mh_cols,
-                    )
-                page_stats_deltas.append(
-                    stats_pool.submit(lambda df=stats: df.localCheckpoint(eager=True))
-                )
-            norm = raw_links.withColumn("_n", self._normalize(F.col("raw_href"))).select(
-                "parent_url", "event_rank", "depth", "span_offset", "link_pos",
-                F.col("_n.href").alias("href"), F.col("_n.scheme").alias("scheme"),
-                F.col("_n.host").alias("host"), F.col("_n.path").alias("path"),
-            ).filter(F.col("href").isNotNull())
-            if invalid_nonempty:
-                norm = norm.join(invalid.withColumnRenamed("url", "href"), "href", "left_anti")  # P13
-            judged = validity_flag(
-                norm,
-                self.base_host if cfg.same_host_only else None,
-                cfg.ignore_patterns,
-            )
-            if self._robots_ok is not None:
-                judged = judged.withColumn("valid", F.col("pre_ok") & self._robots_ok)
-            else:
-                # multi-host frontier: rules as a broadcast table (X3
-                # relational path — a driver-compiled CASE chain over
-                # millions of hosts would blow up codegen)
-                judged = robots_allowed(judged, self._rules_df).withColumn(
-                    "valid", F.col("pre_ok") & F.col("robots_ok")
-                )
-
-            # single pass over the (huge) link set: normalize+validate run
-            # exactly once, map-side partial agg collapses ~links-per-page×
-            # duplication BEFORE anything materializes. `valid` is a pure
-            # function of href, so grouping by (href, valid) == by href.
-            obs_grouped = Observation()
-            # the host string does NOT ride the exchange (guide §2.3 —
-            # shuffle fewer bytes): host is a pure function of href
-            # (urlnorm.host_expr ≡ the normalize struct's host field,
-            # equality-tested), so it is re-derived AFTER the groupBy
-            # from the deduplicated href set — ~links-per-page× fewer
-            # evaluations than rows shuffled, and ~20 bytes less per
-            # shuffled row
-            grouped = judged.groupBy("href", "valid").agg(
-                F.min(F.struct("event_rank", "span_offset", "link_pos", "depth")).alias("k")
-            )
-            # flatten the min-struct BEFORE anything Arrow-bound: a
-            # struct column crosses applyInPandas as per-row Python
-            # dicts (measured ~4x the whole probe's cost at 200k
-            # candidates); flat native columns stay zero-copy
-            grouped = grouped.select(
-                "href",
-                "valid",
-                F.col("k.event_rank").alias("event_rank"),
-                F.col("k.span_offset").alias("span_offset"),
-                F.col("k.link_pos").alias("link_pos"),
-                F.col("k.depth").alias("depth"),
-                host_expr(F.col("href")).alias("host"),
-            )
-            # probe gate: below bloom_probe_min_seen the anti-join the
-            # probe would avoid is cheaper than the probe's own
-            # shard-shuffle + Arrow hop — run exact with NO shard
-            # state at all. The wave the estimate crosses the gate
-            # pays ONE O(seen) build (amortized over the whole crawl);
-            # from then on maintenance is the per-wave O(new) OR-in.
-            if tier_on and tier_df is None and n_seen_est >= cfg.bloom_probe_min_seen:
-                tier_df = self._tier_build(seen, n_seen_est).localCheckpoint(eager=True)
-            probe_on = tier_df is not None and n_seen_est >= cfg.bloom_probe_min_seen
-            metrics = [F.sum((~F.col("valid")).cast("long")).alias("n_invalid_cand")]
-            obs_tier_probe = None
-            if probe_on:
-                # probe INSIDE the checkpointed stage: the definite-new /
-                # maybe-seen branches downstream then read the flag from
-                # memory instead of re-running the cogroup per branch.
-                # n_maybe rides the same action and picks the confirm
-                # strategy (broadcast two-step vs sort-merge anti).
-                if is_cuckoo:
-                    # a cuckoo tier can hold FAILED inserts (= possible
-                    # false negatives); observe the overflow flag on the
-                    # blob side of this very probe so the SAME wave can
-                    # refuse to trust the negatives (fallback below)
-                    obs_tier_probe = Observation()
-                    tier_df = tier_df.observe(obs_tier_probe, self._tier_overflow_metric())
-                grouped = self._tier_probe(grouped, tier_df, url_col="href")
-                metrics.append(
-                    F.sum((F.col("valid") & F.col("maybe_seen")).cast("long")).alias("n_maybe")
-                )
-                # the maybe-set's total URL bytes ride the same action:
-                # the confirm-broadcast gate is rows AND bytes (long
-                # URLs make a row cap unbounded in bytes, ADVICE r3)
-                metrics.append(
-                    F.sum(
-                        F.when(
-                            F.col("valid") & F.col("maybe_seen"),
-                            # octet_length, not length: chars undercount
-                            # multi-byte UTF-8 URLs by up to 4x — the
-                            # exact hazard the byte gate exists for
-                            F.octet_length("href"),
-                        ).cast("long")
-                    ).alias("maybe_bytes")
-                )
-            grouped = grouped.observe(obs_grouped, *metrics).localCheckpoint(eager=True)
-            # observed during the checkpoint pass — replaces the r1
-            # filter(~valid).limit(1).count() probe job
-            n_invalid_cand = int(obs_grouped.get["n_invalid_cand"] or 0)
-            n_maybe = int(obs_grouped.get.get("n_maybe") or 0) if probe_on else 0
-            maybe_bytes = int(obs_grouped.get.get("maybe_bytes") or 0) if probe_on else 0
-            # cuckoo-only soundness gate: if any shard ever FAILED an
-            # insert, a probe negative may be false — this wave must
-            # not trust the probe (exact dedup below) and the shards
-            # are rebuilt with fresh headroom after the wave's new
-            # URLs are known. Observed on the probe's own action.
-            tier_overflowed = bool(
-                obs_tier_probe is not None and int(obs_tier_probe.get["overflow"] or 0)
-            )
-            _tick("extract+norm+judge")
-
-            if n_invalid_cand:
-                new_invalid = (
-                    grouped.filter(~F.col("valid")).select(F.col("href").alias("url"))
-                    .join(invalid, "url", "left_anti")
-                )
-                invalid = invalid.unionByName(new_invalid)
-                if store is None:  # with a store, commit+read-back truncates
-                    invalid = invalid.localCheckpoint(eager=True)
-                invalid_nonempty = True
-
-            # first-encounter dedup (J2): min enqueue key within the wave,
-            # then anti-join the seen set (exact or probe+confirm)
-            trust_probe = probe_on and not tier_overflowed
-            flag_cols = [F.col("maybe_seen")] if trust_probe else []
-            firsts = grouped.filter(F.col("valid")).select(
-                F.col("href").alias("url"),
-                "host",
-                (F.col("depth") + 1).alias("depth"),
-                F.col("event_rank").alias("parent_rank"),
-                "span_offset",
-                "link_pos",
-                *flag_cols,
-            )
-            if trust_probe:
-                new_urls = dedup_new_urls(
-                    firsts, seen, maybe_col="maybe_seen", n_maybe=n_maybe,
-                    maybe_bytes=maybe_bytes,
-                )
-            else:
-                new_urls = dedup_new_urls(firsts, seen)
-            obs_new = Observation()
-            new_urls = (
-                marked_flag(new_urls, cfg.marked_paths, url_col="url")
-                .observe(obs_new, F.count(F.lit(1)).alias("n_new"))
+    def _record_events(self, st: WaveState, sim: DataFrame, n_events: int) -> DataFrame:
+        """The wave's slice of the events log (every dequeue with its
+        status and, under virtual_time_exact, its per-request
+        politeness clock)."""
+        cfg = self.cfg
+        status_col = (
+            F.when(F.col("transport_fail"), "fail")
+            .when(F.col("http_status") == 200, "ok")
+            .when(F.col("http_status") == 404, "notfound")
+            .otherwise("skip")
+            .alias("status")
+        )
+        src, fetch_seq, virtual_ms = sim, F.lit(None).cast("long"), F.lit(None).cast("long")
+        if cfg.virtual_time_exact:
+            # per-request politeness clock: seq within (wave, host),
+            # virtual offset (seq-1) × delay from the wave's virtual
+            # base; the wave's virtual duration is its busiest host's
+            # queue drained at one request per delay. One eager
+            # materialization carries the wave's max seq as an
+            # Observation metric — the host-seq window runs exactly
+            # once (a separate agg job would re-execute it)
+            obs_vt = Observation()
+            src = (
+                with_host_seq(sim, "host", ["event_rank"], "fetch_seq", n_rows=n_events)
+                .observe(obs_vt, F.max("fetch_seq").alias("mx"))
                 .localCheckpoint(eager=True)
             )
-            n_new = int(obs_new.get["n_new"] or 0)
-            if tier_overflowed:
-                # cuckoo past capacity: ONE O(seen) rebuild with fresh
-                # headroom (post-wave seen set — the fallback above
-                # already deduped this wave exactly, so the rebuild
-                # closes the failed-insert window completely)
-                tier_df = self._tier_build(
-                    seen.unionByName(new_urls.select("url")), n_seen_est + n_new
-                ).localCheckpoint(eager=True)
-                tier_chain = 0
-            elif tier_df is not None and n_new:
-                # O(new keys + blob bytes), all executor-side: hash
-                # JVM-side, cogroup the wave's keys with the shard table,
-                # each task folds into ONE shard's blob
-                # (operators/seenset.py). The absorb is LAZY — it rides
-                # the next action that touches the shard table (the next
-                # wave's probe, the store commit, or the periodic settle
-                # below) instead of paying its own per-wave job. The
-                # chain stays shallow: new_urls is already checkpointed,
-                # each link is a cogroup over n_shards rows.
-                tier_df = self._tier_absorb(tier_df, new_urls.select("url"))
-                tier_chain += 1
-            if tier_df is not None and tier_chain >= truncate_every and store is None:
-                # settle the chain: one small job (blob rows only)
-                # truncates lineage and carries the overflow check as an
-                # observed metric — nothing but one int reaches the
-                # driver. Overflow cadence here is every truncate_every
-                # waves: in between, degraded bloom FPR only costs extra
-                # confirm work, never correctness (positives are always
-                # exact-confirmed; cuckoo false NEGATIVES are caught by
-                # the per-probe observation above, not this cadence).
-                obs_settle = Observation()
-                tier_df = (
-                    tier_df.observe(obs_settle, self._tier_overflow_metric())
-                    .localCheckpoint(eager=True)
-                )
-                tier_chain = 0
-                if int(obs_settle.get["overflow"] or 0):
-                    # past sizing: one O(seen) rebuild with fresh
-                    # headroom. `seen` does NOT yet include this wave at
-                    # this point (the state merge happens later in the
-                    # loop) — the unionByName below is required
-                    tier_df = self._tier_build(
-                        seen.unionByName(new_urls.select("url")), n_seen_est + n_new
-                    ).localCheckpoint(eager=True)
-            n_seen_est += n_new
-            _tick("dedup+newurls")
+            fetch_seq = F.col("fetch_seq")
+            virtual_ms = (
+                F.lit(st.virtual_base_ms) + (F.col("fetch_seq") - 1) * F.lit(cfg.request_delay_ms)
+            ).cast("long")
+            st.virtual_base_ms += int(obs_vt.get["mx"] or 0) * cfg.request_delay_ms
+        wave_events = src.select(
+            "event_rank", F.lit(st.wave_id).alias("wave_id"), "url", status_col,
+            fetch_seq.alias("fetch_seq"), virtual_ms.alias("virtual_ms"),
+        )
+        st.events.append(wave_events)
+        return wave_events
 
-            enqueued = new_urls.select(
-                "url", "host", "depth", "parent_rank", "span_offset", "link_pos",
-                F.col("marked").alias("should_fetch"), F.lit(0).alias("retry_count"),
+    def _page_stats(self, ok: DataFrame) -> DataFrame:
+        """Crawl-time page analytics of the wave's fetched pages (lazy)."""
+        text = F.concat_ws(
+            " ",
+            F.transform(F.filter("spans", lambda s: s["kind"] == "text"), lambda s: s["text"]),
+        )
+        toks = F.split(text, " ")
+        fetched_docs = self._with_spans(ok)
+        stats = fetched_docs.select(
+            "url",
+            "event_rank",
+            F.length(text).alias("n_chars"),
+            F.size(toks).alias("n_tokens"),
+            F.size(F.filter(toks, lambda t: t.startswith("w1"))).alias("marker_hits"),
+            F.md5(text).alias("fingerprint"),
+            F.size(F.filter("spans", lambda s: s["kind"] == "media")).alias("n_media"),
+        )
+        if not self.cfg.content_minhash:
+            return stats
+        # in-flight near-dup signatures: minhash over the distinct
+        # UNIGRAM token set (the batch pipeline in operators/dedup.py
+        # uses 3-gram shingles for precision; the in-flight tier
+        # trades n-gram context for a single-split plan). Shape
+        # matters: a SEPARATE narrow branch joined back on the page
+        # key, tokens exploded once, mins aggregated with map-side
+        # combine. Higher-order-function shingling here re-evaluated
+        # split(text) per element_at — the HOF path is interpreted
+        # with NO common-subexpr elimination (measured 10× wall
+        # blowup). ONE md5 per token, N integer permutations of it
+        # (MINHASH_P) — never N md5s. The exploded token rows carry
+        # ONLY the 8-byte event_rank (the wave's unique page key — a
+        # global row_number) instead of (url, event_rank): the
+        # ~40-byte url string multiplied by ~tokens-per-page dominated
+        # the aggregate's hash/partial-agg bytes; url re-attaches via
+        # the stats join below. Same groups, same mins.
+        mh = (
+            fetched_docs.select(
+                "event_rank",
+                F.explode_outer(F.array_distinct(F.split(text, " "))).alias("_g"),
+            )
+            .select(
+                "event_rank",
+                F.conv(F.substring(F.md5("_g"), 1, 8), 16, 10).cast("bigint").alias("_h"),
+            )
+            .groupBy("event_rank")
+            .agg(
+                *[
+                    F.min((F.lit(a) * F.col("_h") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"mh{i}")
+                    for i, (a, b) in enumerate(minhash_ab(CONTENT_MINHASH_SEEDS))
+                ]
+            )
+        )
+        # SHUFFLE_HASH, build = the narrow mh side: the groupBy's own
+        # hash(event_rank) output feeds the join exchange-free, and
+        # neither side pays a sort
+        mh_cols = [f"mh{i}" for i in range(CONTENT_MINHASH_SEEDS)]
+        return stats.join(mh.hint("shuffle_hash"), "event_rank").select(
+            "url", "event_rank", "n_chars", "n_tokens",
+            "marker_hits", "fingerprint", "n_media", *mh_cols,
+        )
+
+    def _extract(
+        self, st: WaveState, ok: DataFrame
+    ) -> tuple[DataFrame, Observation | None, dict]:
+        """Extract → canonicalize → validate the fetched pages' links into
+        one row per href with its min enqueue key, seen-tier probe
+        included, materialized once; folds invalid hrefs into the
+        known-invalid cache. Returns (grouped, the tier's overflow
+        Observation, dedup_new_urls' confirm-strategy arguments)."""
+        cfg = self.cfg
+        # X1 + X2: extract → canonicalize → split empty/known-invalid.
+        raw_links = extract_links(
+            self._with_spans(ok).select("url", "event_rank", "depth", "spans"),
+            id_cols=["url", "event_rank", "depth"],
+        ).withColumnRenamed("url", "parent_url")
+        norm = raw_links.withColumn("_n", self._normalize(F.col("raw_href"))).select(
+            "parent_url", "event_rank", "depth", "span_offset", "link_pos",
+            F.col("_n.href").alias("href"), F.col("_n.scheme").alias("scheme"),
+            F.col("_n.host").alias("host"), F.col("_n.path").alias("path"),
+        ).filter(F.col("href").isNotNull())
+        if st.invalid_nonempty:
+            norm = norm.join(st.invalid.withColumnRenamed("url", "href"), "href", "left_anti")  # P13
+        judged = validity_flag(
+            norm,
+            self.base_host if cfg.same_host_only else None,
+            cfg.ignore_patterns,
+        )
+        if self._robots_ok is not None:
+            judged = judged.withColumn("valid", F.col("pre_ok") & self._robots_ok)
+        else:
+            # multi-host frontier: rules as a broadcast table (X3
+            # relational path — a driver-compiled CASE chain over
+            # millions of hosts would blow up codegen)
+            judged = robots_allowed(judged, self._rules_df).withColumn(
+                "valid", F.col("pre_ok") & F.col("robots_ok")
             )
 
-            # exactly-once content save (T6): marked OR live map value
-            # (reference crawler.go:300-311), P14 min-content guard
-            # (crawler.go:346-348: len(html) < 100 ⇒ no save)
-            saved = marked_flag(ok, cfg.marked_paths, url_col="url").filter(
-                F.col("marked") | F.col("flag_at")
-            )
-            if cfg.min_content_chars > 0:
-                clen = F.aggregate(
-                    "spans",
-                    F.lit(0),
-                    lambda acc, s: acc
-                    + F.length(F.coalesce(s["text"], F.lit("")))
-                    + F.length(F.coalesce(s["media_ref"], F.lit(""))),
-                )
-                saved = (
-                    self._with_spans(saved)
-                    .filter(clen >= cfg.min_content_chars)
-                    .drop("spans")
-                )
-            # ALWAYS one delta per wave (possibly empty) — the commit
-            # below references this wave's delta; conditional appends
-            # crashed wave 0 when marked_paths=[] (r1 verdict bug #1)
-            wave_pages = saved.select("url", "doc_id", "event_rank")
-            pages_deltas.append(wave_pages)
+        # single pass over the (huge) link set: normalize+validate run
+        # exactly once, map-side partial agg collapses ~links-per-page×
+        # duplication BEFORE anything materializes. `valid` is a pure
+        # function of href, so grouping by (href, valid) == by href.
+        # The host string does NOT ride the exchange (guide §2.3 —
+        # shuffle fewer bytes): host is a pure function of href
+        # (urlnorm.host_expr ≡ the normalize struct's host field,
+        # equality-tested), so it is re-derived AFTER the groupBy from
+        # the deduplicated href set — ~links-per-page× fewer
+        # evaluations than rows shuffled, and ~20 bytes less per
+        # shuffled row
+        grouped = judged.groupBy("href", "valid").agg(
+            F.min(F.struct("event_rank", "span_offset", "link_pos", "depth")).alias("k")
+        )
+        # flatten the min-struct BEFORE anything Arrow-bound: a
+        # struct column crosses applyInPandas as per-row Python
+        # dicts (measured ~4x the whole probe's cost at 200k
+        # candidates); flat native columns stay zero-copy
+        grouped = grouped.select(
+            "href",
+            "valid",
+            F.col("k.event_rank").alias("event_rank"),
+            F.col("k.span_offset").alias("span_offset"),
+            F.col("k.link_pos").alias("link_pos"),
+            F.col("k.depth").alias("depth"),
+            host_expr(F.col("href")).alias("host"),
+        )
+        # the probe runs INSIDE the checkpointed stage: the
+        # definite-new / maybe-seen branches downstream then read the
+        # flag from memory instead of re-running the cogroup per
+        # branch. The maybe-set's rows and total URL bytes ride the
+        # same action and pick the confirm strategy (broadcast
+        # two-step vs sort-merge anti): the broadcast gate is rows AND
+        # bytes (long URLs make a row cap unbounded in bytes, ADVICE
+        # r3). octet_length, not length: chars undercount multi-byte
+        # UTF-8 URLs by up to 4x — the exact hazard the byte gate
+        # exists for.
+        grouped, probe_obs = self.tier.probe(grouped, st.seen, url_col="href")
+        metrics = [F.sum((~F.col("valid")).cast("long")).alias("n_invalid_cand")]
+        if probe_obs is not None:
+            maybe = F.col("valid") & F.col("maybe_seen")
+            metrics.append(F.sum(maybe.cast("long")).alias("n_maybe"))
+            metrics.append(F.sum(F.when(maybe, F.octet_length("href")).cast("long")).alias("maybe_bytes"))
+        obs_grouped = Observation()
+        grouped = grouped.observe(obs_grouped, *metrics).localCheckpoint(eager=True)
+        counts = obs_grouped.get
+        confirm = {}
+        if probe_obs is not None:
+            confirm = {
+                "maybe_col": "maybe_seen",
+                "n_maybe": int(counts.get("n_maybe") or 0),
+                "maybe_bytes": int(counts.get("maybe_bytes") or 0),
+            }
 
-            # state MERGE: urls registry (S6/S7 without row CAS).
-            # A content save sets last_saved = now (reference
-            # savePageContent, crawler.go:353-355) — without it the
-            # engine's own output registry can't drive T7 re-crawl
-            # expiry on a later run. The wave's dead-marks and saves
-            # fold into ONE per-url outcome frame, so the O(history)
-            # registry goes through one join (one shuffle) per wave.
-            # (With no marked paths and no live flags nothing is saved:
-            # the pages branch is a constant-false filter the optimizer
-            # prunes.)
-            outcome = (
-                dead.select("url", F.lit(True).alias("_dead"), F.lit(False).alias("_saved"))
-                .unionByName(
-                    wave_pages.select("url", F.lit(False).alias("_dead"), F.lit(True).alias("_saved"))
-                )
-                .groupBy("url")
-                .agg(F.max("_dead").alias("_dead"), F.max("_saved").alias("_saved"))
+        if int(counts["n_invalid_cand"] or 0):
+            new_invalid = (
+                grouped.filter(~F.col("valid")).select(F.col("href").alias("url"))
+                .join(st.invalid, "url", "left_anti")
             )
-            urls = (
-                urls.join(outcome, "url", "left")
-                .withColumn("is_alive", F.when(F.col("_dead"), F.lit(False)).otherwise(F.col("is_alive")))
-                .withColumn(
-                    "last_saved",
-                    F.when(F.col("_saved"), F.lit(float(cfg.now_ts))).otherwise(F.col("last_saved")),
-                )
-                .drop("_dead", "_saved")
-            ).unionByName(
-                new_urls.select(
-                    "url", F.col("marked").alias("is_monitored"),
-                    F.lit(True).alias("is_alive"), F.lit(None).cast("double").alias("last_saved"),
-                )
-            )
-            # enqueued is already wave-distinct AND anti-joined vs seen,
-            # so a plain union keeps `seen` duplicate-free — no distinct
-            seen = seen.unionByName(enqueued.select("url"))
+            st.invalid = st.invalid.unionByName(new_invalid)
+            if st.store is None:
+                st.invalid = st.invalid.localCheckpoint(eager=True)
+            st.invalid_nonempty = True
+        return grouped, probe_obs, confirm
 
-            # map-value updates for the next wave: any consuming event
-            # (save/fail) resets to false; fresh discoveries enter with
-            # their marked flag (SetMapValue(true) at crawler.go:276-278,
-            # Insert default false at queue/queue.go:104)
-            if flags_live:
-                consumed = (
-                    sim.filter(F.col("transport_fail") | (F.col("http_status") == 200))
-                    .select("url").distinct().withColumn("_new_flag", F.lit(False))
-                )
-                fetch_flags = (
-                    fetch_flags.join(consumed, "url", "left")
-                    .select(
-                        "url",
-                        F.when(F.col("_new_flag").isNotNull(), F.lit(False)).otherwise(F.col("flag")).alias("flag"),
-                    )
-                    .unionByName(new_urls.select("url", F.col("marked").alias("flag")))
-                )
-                if store is None:
-                    # without a store the per-wave join/union lineage must
-                    # be cut here; with one, the commit write + read-back
-                    # below does it for free
-                    fetch_flags = fetch_flags.localCheckpoint(eager=True)
+    def _dedup(
+        self, st: WaveState, grouped: DataFrame, probe_obs: Observation | None, confirm: dict
+    ) -> tuple[DataFrame, DataFrame, int]:
+        """First-encounter dedup (J2): the wave's valid candidates
+        (min enqueue key per href) minus the seen set. Returns
+        (firsts, new_urls, n_new); the tier absorbs new_urls."""
+        # an overflowed tier may hold FAILED inserts (= possible false
+        # negatives), so the wave that observes it dedups exactly
+        overflowed = self.tier.overflowed(probe_obs)
+        trust_probe = probe_obs is not None and not overflowed
+        firsts = grouped.filter(F.col("valid")).select(
+            F.col("href").alias("url"),
+            "host",
+            (F.col("depth") + 1).alias("depth"),
+            F.col("event_rank").alias("parent_rank"),
+            "span_offset",
+            "link_pos",
+            *([F.col("maybe_seen")] if trust_probe else []),
+        )
+        new_urls = dedup_new_urls(firsts, st.seen, **(confirm if trust_probe else {}))
+        obs_new = Observation()
+        new_urls = (
+            marked_flag(new_urls, self.cfg.marked_paths, url_col="url")
+            .observe(obs_new, F.count(F.lit(1)).alias("n_new"))
+            .localCheckpoint(eager=True)
+        )
+        n_new = int(obs_new.get["n_new"] or 0)
+        self.tier.absorb(st.seen, new_urls, n_new, overflowed, settle=st.store is None)
+        return firsts, new_urls, n_new
 
-            # lineage (A3): per host-shard metrics for this wave. The
-            # politeness model (T1): within a wave each host is fetched
-            # sequentially with request_delay_ms spacing (the reference's
-            # per-worker sleep, crawler.go:326), hosts in parallel — so a
-            # shard's virtual wall-clock is its busiest host's queue
-            # length × delay. One two-level aggregate over a tagged
-            # union of the wave's events (dq, f), candidates (cand) and
-            # new URLs (enq): one shuffle, no joins. Candidate and
-            # new-URL rows carry a NULL host — they only add to their
-            # shard's counts, and their dq of 0 never moves the max.
-            shard = F.pmod(F.xxhash64("host"), F.lit(cfg.n_shards)).cast("int")
-            one, zero, no_host = F.lit(1), F.lit(0), F.lit(None).cast("string")
-            tagged = (
-                sim.select(
-                    shard.alias("partition_id"), "host", one.alias("dq"),
-                    (~F.col("transport_fail") & (F.col("http_status") == 200)).cast("int").alias("f"),
-                    zero.alias("cand"), zero.alias("enq"),
-                )
-                .unionByName(firsts.select(
-                    shard.alias("partition_id"), no_host.alias("host"), zero.alias("dq"),
-                    zero.alias("f"), one.alias("cand"), zero.alias("enq"),
-                ))
-                .unionByName(enqueued.select(
-                    shard.alias("partition_id"), no_host.alias("host"), zero.alias("dq"),
-                    zero.alias("f"), zero.alias("cand"), one.alias("enq"),
-                ))
+    def _save_pages(self, ok: DataFrame) -> DataFrame:
+        """The wave's pages delta: exactly-once content save (T6)."""
+        # marked OR live map value (reference crawler.go:300-311), P14
+        # min-content guard (crawler.go:346-348: len(html) < 100 ⇒ no save)
+        cfg = self.cfg
+        saved = marked_flag(ok, cfg.marked_paths, url_col="url").filter(
+            F.col("marked") | F.col("flag_at")
+        )
+        if cfg.min_content_chars > 0:
+            clen = F.aggregate(
+                "spans",
+                F.lit(0),
+                lambda acc, s: acc
+                + F.length(F.coalesce(s["text"], F.lit("")))
+                + F.length(F.coalesce(s["media_ref"], F.lit(""))),
             )
-            lin = (
-                tagged.groupBy("partition_id", "host")
-                .agg(*[F.sum(c).alias(c) for c in ("dq", "f", "cand", "enq")])
-                .groupBy("partition_id")
-                .agg(
-                    F.sum("dq").alias("dequeued"),
-                    F.sum("f").alias("fetched"),
-                    (F.sum("cand") - F.sum("enq")).alias("deduped"),
-                    F.sum("enq").alias("enqueued"),
-                    (F.max("dq") * F.lit(cfg.request_delay_ms)).cast("long").alias("virtual_ms"),
-                )
+            saved = (
+                self._with_spans(saved)
+                .filter(clen >= cfg.min_content_chars)
+                .drop("spans")
+            )
+        return saved.select("url", "doc_id", "event_rank")
+
+    def _merge(
+        self, st: WaveState, sim: DataFrame, ok: DataFrame, deferred: DataFrame,
+        firsts: DataFrame, new_urls: DataFrame, n_frontier: int,
+    ) -> tuple[DataFrame, DataFrame]:
+        """State MERGE + lineage: the pages delta, the urls registry
+        (S6/S7 without row CAS), seen, the queue-map values and the
+        next frontier (size ``n_frontier``). Returns the wave's pages
+        and lineage deltas."""
+        cfg = self.cfg
+        enqueued = new_urls.select(
+            "url", "host", "depth", "parent_rank", "span_offset", "link_pos",
+            F.col("marked").alias("should_fetch"), F.lit(0).alias("retry_count"),
+        )
+        # ALWAYS one delta per wave (possibly empty) — the commit
+        # references this wave's delta; conditional appends crashed
+        # wave 0 when marked_paths=[] (r1 verdict bug #1)
+        wave_pages = self._save_pages(ok)
+        st.pages.append(wave_pages)
+
+        # A content save sets last_saved = now (reference
+        # savePageContent, crawler.go:353-355) — without it the
+        # engine's own output registry can't drive T7 re-crawl expiry
+        # on a later run. The wave's dead-marks and saves fold into ONE
+        # per-url outcome frame, so the O(history) registry goes
+        # through one join (one shuffle) per wave. (With no marked
+        # paths and no live flags nothing is saved: the pages branch
+        # is a constant-false filter the optimizer prunes.)
+        dead = sim.filter(~F.col("transport_fail") & (F.col("http_status") == 404)).select("url")
+        outcome = (
+            dead.select("url", F.lit(True).alias("_dead"), F.lit(False).alias("_saved"))
+            .unionByName(
+                wave_pages.select("url", F.lit(False).alias("_dead"), F.lit(True).alias("_saved"))
+            )
+            .groupBy("url")
+            .agg(F.max("_dead").alias("_dead"), F.max("_saved").alias("_saved"))
+        )
+        st.urls = (
+            st.urls.join(outcome, "url", "left")
+            .withColumn("is_alive", F.when(F.col("_dead"), F.lit(False)).otherwise(F.col("is_alive")))
+            .withColumn(
+                "last_saved",
+                F.when(F.col("_saved"), F.lit(float(cfg.now_ts))).otherwise(F.col("last_saved")),
+            )
+            .drop("_dead", "_saved")
+        ).unionByName(
+            new_urls.select(
+                "url", F.col("marked").alias("is_monitored"),
+                F.lit(True).alias("is_alive"), F.lit(None).cast("double").alias("last_saved"),
+            )
+        )
+        # enqueued is already wave-distinct AND anti-joined vs seen,
+        # so a plain union keeps `seen` duplicate-free — no distinct
+        st.seen = st.seen.unionByName(enqueued.select("url"))
+
+        # map-value updates for the next wave: any consuming event
+        # (save/fail) resets to false; fresh discoveries enter with
+        # their marked flag (SetMapValue(true) at crawler.go:276-278,
+        # Insert default false at queue/queue.go:104)
+        if st.flags_live:
+            consumed = (
+                sim.filter(F.col("transport_fail") | (F.col("http_status") == 200))
+                .select("url").distinct().withColumn("_new_flag", F.lit(False))
+            )
+            st.fetch_flags = (
+                st.fetch_flags.join(consumed, "url", "left")
                 .select(
-                    F.lit(wave_id).alias("wave_id"), "partition_id", "dequeued", "fetched",
-                    "deduped", "enqueued", "virtual_ms",
+                    "url",
+                    F.when(F.col("_new_flag").isNotNull(), F.lit(False)).otherwise(F.col("flag")).alias("flag"),
                 )
+                .unionByName(new_urls.select("url", F.col("marked").alias("flag")))
             )
-            lineage_deltas.append(lin)
+            if st.store is None:
+                st.fetch_flags = st.fetch_flags.localCheckpoint(eager=True)
 
-            _tick("state-merge+lineage")
-            frontier = retries.unionByName(deferred).unionByName(enqueued)
-            # next wave's size from observed counters — no count() job
-            n_frontier = n_retries + n_deferred + n_new
+        lin = self._lineage(st, sim, firsts, enqueued)
+        st.lineage.append(lin)
 
-            # periodic lineage truncation for the slowly-growing state
-            # (they gain one cheap union/join per wave; truncating every
-            # wave costs more jobs than it saves)
-            if store is None and wave_id % truncate_every == truncate_every - 1:
-                seen = seen.localCheckpoint(eager=True)
-                urls = urls.localCheckpoint(eager=True)
+        retries = (
+            sim.filter(F.col("transport_fail") & (F.col("retry_count") < F.lit(cfg.retry_times)))
+            .select(
+                "url", "host", "depth",
+                F.col("event_rank").alias("parent_rank"),
+                F.lit(-1).alias("span_offset"), F.lit(0).alias("link_pos"),
+                F.lit(False).alias("should_fetch"),  # InsertForce resets the map value (queue/queue.go:124)
+                (F.col("retry_count") + 1).alias("retry_count"),
+            )
+        )
+        st.frontier = retries.unionByName(deferred).unionByName(enqueued)
+        st.n_frontier = n_frontier
 
-            if store:
-                snap = {
-                    "frontier": frontier, "urls": urls, "seen": seen,
-                    "fetch_flags": fetch_flags, "invalid": invalid,
-                }
-                obs_commit_tier = None
-                if tier_df is not None:
-                    # shard blobs round-trip the store under the mode
-                    # name ("bloom"/"cuckoo"): resume reuses them
-                    # instead of an O(seen) rebuild. Already a
-                    # DataFrame — the commit write executes any pending
-                    # lazy absorb links, fires the overflow metric, and
-                    # the read-back below truncates the chain. The
-                    # driver never touches a blob.
-                    obs_commit_tier = Observation()
-                    tier_df = tier_df.observe(obs_commit_tier, self._tier_overflow_metric())
-                    snap[cfg.seen_mode] = tier_df
-                entry = store.commit(
-                    wave_id,
-                    snap,
-                    # THIS wave's deltas, never deltas[-1]: on resume the
-                    # loaded cumulative logs sit at deltas[0] and must not
-                    # be re-committed as a new delta
-                    appends={
-                        "events": wave_events,
-                        "pages": wave_pages,
-                        "lineage": lin,
-                    },
-                    meta={
-                        "event_base": event_base,
-                        "virtual_base_ms": virtual_base_ms,
-                        # tier sizing pins ride the manifest so resume
-                        # addresses the shard table that exists
-                        "tier_shards": self._tier_shards,
-                        "tier_ps": self._tier_ps,
-                        # content-signature format version (ADVICE r5):
-                        # 2 = bigint universal-hash minhash columns
-                        # (r5 rewrite); absent/1 = the md5-hex-string
-                        # era. Resume refuses a cross-format checkpoint
-                        # loudly instead of failing later on schema
-                        # merge of mixed mh column types.
-                        "stats_format": STATS_FORMAT,
-                    },
-                )
-                # the commit write already materialized every state
-                # table — re-reading the committed parquet truncates
-                # lineage (replaces the per-wave eager localCheckpoints
-                # of r1). Passing the written schema keeps the read-back
-                # free of jobs: without it Spark runs a schema-inference
-                # job per parquet read (six per wave).
-                def reread(name):
-                    return spark.read.schema(snap[name].schema).parquet(entry["tables"][name])
+        if st.store is None and st.wave_id % TRUNCATE_EVERY == TRUNCATE_EVERY - 1:
+            st.seen = st.seen.localCheckpoint(eager=True)
+            st.urls = st.urls.localCheckpoint(eager=True)
+        return wave_pages, lin
 
-                seen = reread("seen")
-                urls = reread("urls")
-                invalid = reread("invalid")
-                frontier = reread("frontier")
-                if flags_live:
-                    fetch_flags = reread("fetch_flags")
-                if obs_commit_tier is not None:
-                    tier_df = reread(cfg.seen_mode)
-                    tier_chain = 0
-                    if int(obs_commit_tier.get["overflow"] or 0):
-                        # the rebuild is PERSISTED via an atomic manifest
-                        # amend (ADVICE r3: an in-memory-only rebuild
-                        # evaporated on kill, so resume repeated the
-                        # O(seen) work from degraded-FPR blobs); the
-                        # read-back also truncates the build's lineage
-                        # _tier_build (first arg) updates the sizing
-                        # pins BEFORE the meta dict is built — the
-                        # amended manifest must describe the rebuilt
-                        # table, not the one it replaces
-                        rebuilt = self._tier_build(seen, n_seen_est)
-                        entry = store.amend(
-                            cfg.seen_mode,
-                            rebuilt,
-                            f"rebuild={wave_id}",
-                            meta={
-                                "tier_shards": self._tier_shards,
-                                "tier_ps": self._tier_ps,
-                            },
-                        )
-                        tier_df = spark.read.parquet(entry["tables"][cfg.seen_mode])
-            _tick("truncate+commit")
-            if debug_timing:
-                print(f"  wave {wave_id}: {n_events} events", flush=True)
-            wave_id += 1
+    def _lineage(
+        self, st: WaveState, sim: DataFrame, firsts: DataFrame, enqueued: DataFrame
+    ) -> DataFrame:
+        """Lineage (A3): per host-shard metrics for this wave."""
+        # The politeness model (T1): within a wave each host is fetched
+        # sequentially with request_delay_ms spacing (the reference's
+        # per-worker sleep, crawler.go:326), hosts in parallel — so a
+        # shard's virtual wall-clock is its busiest host's queue length
+        # × delay. One two-level aggregate over a tagged union of the
+        # wave's events (dq, f), candidates (cand) and new URLs (enq):
+        # one shuffle, no joins. Candidate and new-URL rows carry a NULL
+        # host — they only add to their shard's counts, and their dq of
+        # 0 never moves the max.
+        cfg = self.cfg
+        shard = F.pmod(F.xxhash64("host"), F.lit(cfg.n_shards)).cast("int")
+        one, zero, no_host = F.lit(1), F.lit(0), F.lit(None).cast("string")
+        tagged = (
+            sim.select(
+                shard.alias("partition_id"), "host", one.alias("dq"),
+                (~F.col("transport_fail") & (F.col("http_status") == 200)).cast("int").alias("f"),
+                zero.alias("cand"), zero.alias("enq"),
+            )
+            .unionByName(firsts.select(
+                shard.alias("partition_id"), no_host.alias("host"), zero.alias("dq"),
+                zero.alias("f"), one.alias("cand"), zero.alias("enq"),
+            ))
+            .unionByName(enqueued.select(
+                shard.alias("partition_id"), no_host.alias("host"), zero.alias("dq"),
+                zero.alias("f"), zero.alias("cand"), one.alias("enq"),
+            ))
+        )
+        return (
+            tagged.groupBy("partition_id", "host")
+            .agg(*[F.sum(c).alias(c) for c in ("dq", "f", "cand", "enq")])
+            .groupBy("partition_id")
+            .agg(
+                F.sum("dq").alias("dequeued"),
+                F.sum("f").alias("fetched"),
+                (F.sum("cand") - F.sum("enq")).alias("deduped"),
+                F.sum("enq").alias("enqueued"),
+                (F.max("dq") * F.lit(cfg.request_delay_ms)).cast("long").alias("virtual_ms"),
+            )
+            .select(
+                F.lit(st.wave_id).alias("wave_id"), "partition_id", "dequeued", "fetched",
+                "deduped", "enqueued", "virtual_ms",
+            )
+        )
 
-        # the last wave's delta may still be running — its job
-        # overlapped the loop's tail phases
-        settle_stats(wait=True)
+    def _commit(self, st: WaveState, appends: dict[str, DataFrame]) -> None:
+        """Checkpoint commit (T5) of the wave's state and its append-log
+        deltas, then read the state back from the snapshot."""
+        tables = {
+            "frontier": st.frontier, "urls": st.urls, "seen": st.seen,
+            "fetch_flags": st.fetch_flags, "invalid": st.invalid,
+        }
+        entry = self.tier.commit(
+            st.store,
+            st.wave_id,
+            tables,
+            appends=appends,
+            meta={
+                "event_base": st.event_base,
+                "virtual_base_ms": st.virtual_base_ms,
+                # content-signature format version (ADVICE r5): resume
+                # refuses a cross-format checkpoint loudly instead of
+                # failing later on schema merge of mixed mh column types
+                "stats_format": STATS_FORMAT,
+            },
+        )
+        for name in ("seen", "urls", "invalid", "frontier") + (("fetch_flags",) if st.flags_live else ()):
+            setattr(st, name, _reread(entry, tables, name))
 
-        def _acc(deltas: list[DataFrame], schema: str) -> DataFrame:
-            if not deltas:
-                return self._empty(schema)
-            out = deltas[0]
-            for d in deltas[1:]:
-                out = out.unionByName(d)
-            return out
+    def _result(self, st: WaveState) -> CrawlResult:
+        def union_all(deltas: list[DataFrame], schema: str) -> DataFrame:
+            return reduce(DataFrame.unionByName, deltas) if deltas else self._empty(schema)
 
         return CrawlResult(
-            events=_acc(events_deltas, EVENTS_COLS),
-            urls=urls,
-            pages=_acc(pages_deltas, PAGES_COLS),
-            seen=seen,
-            invalid=invalid,
-            lineage=_acc(lineage_deltas, LINEAGE_COLS),
-            waves=wave_id,
-            page_stats=_acc(page_stats_deltas, PAGE_STATS_COLS),
+            events=union_all(st.events, EVENTS_COLS),
+            urls=st.urls,
+            pages=union_all(st.pages, PAGES_COLS),
+            seen=st.seen,
+            invalid=st.invalid,
+            lineage=union_all(st.lineage, LINEAGE_COLS),
+            waves=st.wave_id,
+            page_stats=union_all(st.page_stats, PAGE_STATS_COLS),
         )

@@ -16,7 +16,7 @@ machinery exercised is the real streaming seen-set.
 
 Scale note: the state store holds every key ever seen — exactly the
 crawl's lifetime-dedup semantics. At 10^10 keys that state is what
-the bloom/cuckoo shard tiers bound in the batch engine; Structured
+the cuckoo shard tier bounds in the batch engine; Structured
 Streaming's own bounded variant is dropDuplicatesWithinWatermark
 when the contract allows expiry, which this one (lifetime dedup)
 does not.
