@@ -13,8 +13,6 @@ BASE = "https://site.test"
     [
         ({"seen_mode": "bloom"}, "cuckoo"),
         ({"seen_mode": "exaxt"}, "seen_mode"),
-        ({"canonicalizer": "jvn"}, "canonicalizer"),
-        ({"robots_mode": "jion"}, "robots_mode"),
         ({"content_minhash": True}, "analyze_pages"),
     ],
 )

@@ -9,10 +9,11 @@ The UniqueQueue maps onto DataFrame primitives:
 """
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
 from webcrawlergo_spark.operators.seenset import dedup_new_urls
-from webcrawlergo_spark.plans.rank import _prefix_offsets, with_global_rank
+from webcrawlergo_spark.plans import rank
+from webcrawlergo_spark.plans.rank import with_global_rank
 
 
 def _urls_df(spark, items):
@@ -56,14 +57,21 @@ def test_global_rank_across_partitions(spark):
     assert [int(r["url"]) for r in rows] == list(range(1000))
 
 
-def test_prefix_offsets_rejects_oversized_partitions(spark):
-    """A partition at the monotonically_increasing_id record-field bound
-    is refused on the driver instead of decoding to wrong ranks."""
-    local = spark.range(10).select((F.col("id") % 2).cast("int").alias("_pid"))
-    off = _prefix_offsets(local, F.count("*"), start=3, max_per_pid=6)
-    assert sorted(tuple(r) for r in off.collect()) == [(0, 3), (1, 8)]
-    with pytest.raises(RuntimeError, match="partitions \\[0, 1\\]"):
-        _prefix_offsets(local, F.count("*"), max_per_pid=5)
+def test_distributed_prefix_rejects_oversized_partitions(spark, monkeypatch):
+    """A partition past the monotonically_increasing_id record-field
+    bound is refused (the guard rides the checkpoint as an Observation)
+    instead of decoding to wrong ranks — on every distributed name."""
+    monkeypatch.setattr(rank, "MAX_PER_PARTITION", 4)
+    df = spark.range(200).select(
+        F.col("id"), F.concat(F.lit("h"), F.col("id") % 3).alias("host"), F.col("id").alias("v")
+    )
+    for call in (
+        lambda: rank.with_global_rank(df, ["id"], "r"),
+        lambda: rank.with_host_seq(df, "host", ["id"], "s"),
+        lambda: rank.with_running_sum(df, ["id"], "v", "c"),
+    ):
+        with pytest.raises(RuntimeError, match="monotonically_increasing_id"):
+            call()
 
 
 def test_fetch_flag_semantics(web, default_run):
@@ -112,50 +120,60 @@ def test_get_map_value_and_not_found(spark):
         get_map_value(flags, "never-inserted")
 
 
-def test_with_host_seq_distributed_path_matches_window(spark):
-    """The distributed per-host sequence (range partition + local rank
-    + prefix-sum offsets over the counts table) must equal the plain
-    window row_number — exercised on the BIG path (n_rows omitted so
-    the range-partition machinery runs even at test size), with a
-    skewed mega-host (half the rows on one host)."""
-    from pyspark.sql import Window, functions as F
-
-    from webcrawlergo_spark.plans.rank import with_host_seq
-
-    df = spark.range(20_000).select(
+def _rank_input(spark, n):
+    """(id, k, host, v): k has ties (broken by id), one mega-host holds
+    half the rows, every 13th value is NULL."""
+    return spark.range(n).select(
+        F.col("id"),
+        F.pmod(F.col("id") * 31, F.lit(997)).alias("k"),
         F.when(F.col("id") % 2 == 0, F.lit("mega.test"))
         .otherwise(F.concat(F.lit("h"), F.pmod(F.col("id"), 97)))
         .alias("host"),
-        F.col("id").alias("event_rank"),
+        F.when(F.col("id") % 13 == 0, F.lit(None))
+        .otherwise(F.pmod(F.col("id") * 7919, 251) + 1)
+        .alias("v"),
     )
-    got = {
-        (r["host"], r["event_rank"]): r["seq"]
-        for r in with_host_seq(df, "host", ["event_rank"], "seq").collect()
-    }
-    w = Window.partitionBy("host").orderBy("event_rank")
-    want = {
-        (r["host"], r["event_rank"]): r["seq"]
-        for r in df.withColumn("seq", F.row_number().over(w).cast("long")).collect()
-    }
-    assert got == want
 
 
-def test_with_running_sum_distributed_path_matches_window(spark):
-    """The distributed global prefix sum (range partition + local
-    cumsum window + per-partition total offsets) must equal the plain
-    single-partition SUM() OVER window — BIG path (n_rows omitted),
-    uneven values so offset mistakes can't cancel out."""
-    from pyspark.sql import Window, functions as F
+RANK_CASES = {
+    # name: (call, plain single-window reference)
+    "global_rank": (
+        lambda df, n: rank.with_global_rank(df, ["k", "id"], "out", start=7, n_rows=n),
+        lambda: F.row_number().over(Window.orderBy("k", "id")) - 1 + 7,
+    ),
+    "host_seq": (
+        lambda df, n: rank.with_host_seq(df, "host", ["k", "id"], "out", n_rows=n),
+        lambda: F.row_number().over(Window.partitionBy("host").orderBy("k", "id")),
+    ),
+    "running_sum": (
+        lambda df, n: rank.with_running_sum(df, ["k", "id"], "v", "out", n_rows=n),
+        lambda: F.sum(F.coalesce("v", F.lit(0))).over(
+            Window.orderBy("k", "id").rowsBetween(Window.unboundedPreceding, 0)
+        ),
+    ),
+}
 
-    from webcrawlergo_spark.plans.rank import with_running_sum
 
-    df = spark.range(20_000).select(
-        F.col("id").alias("k"), (F.pmod(F.col("id") * 7919, 251) + 1).alias("v")
-    )
-    got = {r["k"]: r["cum"] for r in with_running_sum(df, ["k"], "v", "cum").collect()}
-    w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
-    want = {r["k"]: r["cum"] for r in df.withColumn("cum", F.sum("v").over(w).cast("long")).collect()}
-    assert got == want
+@pytest.mark.parametrize("partitions", [1, 3, 17])
+@pytest.mark.parametrize("small", [True, False], ids=["small", "distributed"])
+@pytest.mark.parametrize("name", sorted(RANK_CASES))
+def test_prefix_paths_match_plain_window(spark, name, small, partitions):
+    """Each rank name equals the plain window row for row on both paths
+    (small: n_rows given; distributed: n_rows omitted, so the
+    range-partition recipe runs even at test size) and for any
+    partition count — with start≠0, NULL values, a mega-host holding
+    half the rows and an empty frame."""
+    call, plain = RANK_CASES[name]
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    try:
+        for df in (_rank_input(spark, 3_000), _rank_input(spark, 0)):
+            got = call(df, df.count() if small else None)
+            want = df.withColumn("out", plain().cast("long"))
+            assert got.dtypes == want.dtypes
+            assert sorted(got.collect()) == sorted(want.collect())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
 
 
 def test_salted_topk_per_group_matches_plain_window(spark):

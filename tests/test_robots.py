@@ -111,18 +111,21 @@ def test_hard_fail_disallows_everything(spark):
     assert cand.withColumn("ok", robots_ok_expr(rules)).collect()[0]["ok"] is False
 
 
-def test_engine_relational_robots_parity(spark, web, web_dfs, default_run):
-    """The multi-host relational robots path (robots_mode='join')
-    produces the identical crawl to the codegen CASE-chain path."""
-    from webcrawlergo_spark.plans.wave import CrawlConfig, CrawlEngine
+def test_engine_relational_robots_parity(spark, web, web_dfs, default_run, monkeypatch):
+    """The multi-host relational robots path (the robots_allowed join a
+    rule set above ROBOTS_EXPR_MAX_RULES takes) produces the identical
+    crawl to the codegen CASE-chain path."""
+    from webcrawlergo_spark.plans import wave
 
-    cfg = CrawlConfig(
+    monkeypatch.setattr(wave, "ROBOTS_EXPR_MAX_RULES", 0)
+    cfg = wave.CrawlConfig(
         base_url=web.base_url,
         marked_paths=web.marked_paths,
         ignore_patterns=web.ignore_patterns,
-        robots_mode="join",
     )
-    res = CrawlEngine(spark, web_dfs["index"], web_dfs["docs"], web_dfs["robots"], cfg).run()
+    eng = wave.CrawlEngine(spark, web_dfs["index"], web_dfs["docs"], web_dfs["robots"], cfg)
+    assert eng._robots_ok is None  # the join path, not the CASE chain
+    res = eng.run()
     assert res.event_order() == default_run.event_order()
     assert sorted(r["url"] for r in res.invalid.collect()) == sorted(
         r["url"] for r in default_run.invalid.collect()

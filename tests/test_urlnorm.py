@@ -61,10 +61,9 @@ def test_full_canonicalizer_rfc3986():
 
 
 def test_expr_and_pandas_paths_agree_on_adversarial_corpus(spark):
-    """The engine ships TWO canonicalizer implementations behind one
-    seam (JVM codegen `normalize_expr` — the hot path — and the
-    pandas-UDF extension path); the taxonomy pins each against the
-    golden, but their MUTUAL equality had only those 21 strings.
+    """The engine canonicalizes with JVM codegen `normalize_expr`; the
+    pandas UDF is its reference twin. The taxonomy pins each against
+    the golden, but their MUTUAL equality had only those 21 strings.
     This drives both paths over ~2,000 seeded adversarial hrefs
     (scheme soup, case variants, embedded spaces, %-escapes, //,
     fragments, bare garbage, whitespace padding) in one job and

@@ -1,4 +1,4 @@
-"""URL canonicalizer — the X2 vectorized UDF surface.
+"""URL canonicalizer (X2).
 
 Reproduces the reference's href handling exactly (F1+F2+F3,
 reference crawler.go:382-391,419-437 + internal/utils.go:26-34):
@@ -6,11 +6,11 @@ trim space, trim ONE trailing slash, drop empty, resolve relative
 (unless prefix-blacklisted) against the base URL, split into
 scheme/host/path.
 
-Everything is pandas vectorized string ops over Arrow batches — no
-per-row Python in the hot path. The one irreducibly per-element step
-(percent-decoding for the north rule's full RFC 3986 canonical form)
-runs on *unique* values only (`canonicalize_full`), the standard
-dedup-then-map vectorization trick.
+The engine runs ``normalize_expr`` (JVM codegen); ``_normalize_pd``
+and its UDF are the pandas reference twin the tests check it against.
+The full RFC 3986 canonical form (north rule) percent-decodes per
+element, so it runs on *unique* values only (`canonicalize_full_udf`),
+the standard dedup-then-map vectorization trick.
 """
 
 from __future__ import annotations
@@ -41,6 +41,7 @@ NORM_SCHEMA = T.StructType(
 
 
 def _normalize_pd(raw: pd.Series, base_url: str) -> pd.DataFrame:
+    """Pandas reference twin of ``normalize_expr`` (tests only)."""
     s = raw.fillna("").str.strip()
     s = s.str.replace(r"/$", "", regex=True)  # TrimSuffix: at most one match at $
     empty = s == ""
@@ -62,7 +63,8 @@ def _normalize_pd(raw: pd.Series, base_url: str) -> pd.DataFrame:
 
 
 def make_normalize_udf(base_url: str):
-    """Pandas UDF (Arrow-batched) binding the base URL."""
+    """``_normalize_pd`` as an Arrow-batched pandas UDF binding the
+    base URL; the reference twin, not used by the engine."""
 
     @F.pandas_udf(NORM_SCHEMA)
     def normalize(raw: pd.Series) -> pd.DataFrame:
@@ -86,13 +88,9 @@ def host_expr(s):
 
 
 def normalize_expr(base_url: str, raw):
-    """JVM-codegen twin of the pandas canonicalizer: identical
-    semantics, zero Python in the stage (tests assert equality with
-    ``_normalize_pd`` over the full href taxonomy).
-
-    This is the engine's default hot path — whole-stage-codegen regex
-    beats Arrow round-trips; the pandas UDF remains the extension
-    surface for transforms that genuinely need Python.
+    """The engine's canonicalizer: JVM column expressions, zero Python
+    in the stage. Tests assert equality with the pandas reference twin
+    ``_normalize_pd`` over the href taxonomy and an adversarial corpus.
     """
     s = F.trim(raw)
     s = F.regexp_replace(s, r"/$", "")  # TrimSuffix: one trailing slash

@@ -11,7 +11,8 @@ Document order is preserved as computed columns: ``span_offset``
 (span position) + ``link_pos`` (anchor index within the span) —
 never an execution-order accident. Media spans yield no links
 (FIXTURES.md §1). Fully JVM-side / whole-stage-codegen; the
-canonicalizer UDF runs *after* this, on the already-exploded column.
+canonicalizer (``normalize_expr``) runs *after* this, on the
+already-exploded column.
 """
 
 from __future__ import annotations

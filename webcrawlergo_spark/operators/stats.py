@@ -9,9 +9,11 @@ exact AND stays parallel:
 1. `groupBy(value).count()` — one shuffle, map-side combine; the
    working set shrinks from rows to DISTINCT values;
 2. global inclusive prefix sum of the counts in value order via the
-   range-partition recipe (`plans/rank.py::with_running_sum`: 3
-   passes, per-partition offsets from a #partitions-sized driver
-   cumsum — never `SUM() OVER (ORDER BY ...)`'s single partition);
+   range-partition recipe (`plans/rank.py::with_running_sum`: one
+   range exchange pinned by a checkpoint, a partition-local window
+   sum, and per-partition offsets from a window over a
+   #partitions-row table joined back by broadcast — never
+   `SUM() OVER (ORDER BY ...)`'s single partition);
 3. target ranks = ceil(p·N) from a 1-row total (broadcast); the
    answer for p is the unique STRADDLING value — the one whose
    exclusive..inclusive cumulative range contains the target

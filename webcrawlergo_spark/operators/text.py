@@ -209,8 +209,9 @@ def pack_documents(spark: SparkSession, sf_dir: str, budget: int = PACK_BUDGET) 
 
     Scale shape: the global running sum is the distributed
     range-partition prefix sum (plans/rank.py::with_running_sum —
-    partition-local window + #partitions driver offsets), NEVER a
-    single-partition ``SUM() OVER (ORDER BY ...)``.
+    partition-local window + per-partition offsets from a
+    #partitions-row table, broadcast back), NEVER a single-partition
+    ``SUM() OVER (ORDER BY ...)``.
     """
     from ..plans.rank import with_running_sum
 

@@ -50,7 +50,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
 
-from ..functions.urlnorm import host_expr, make_normalize_udf, normalize_expr
+from ..functions.urlnorm import host_expr, normalize_expr
 from ..operators.linkextract import extract_links
 from ..operators.sampling import salted_topk_split
 from ..operators.seenset import (
@@ -91,8 +91,10 @@ CONTENT_MINHASH_SEEDS = 8
 # at a later multi-file schema merge. 2 = bigint universal-hash
 # minhash (r5); 1/absent = the md5-hex-string era.
 STATS_FORMAT = 2
-# robots_mode="auto" compiles rule sets up to this size into a CASE
-# chain and evaluates bigger ones as a join
+# robots rule sets up to this size compile into a whole-stage-codegen
+# CASE chain (zero shuffle — right for one or a few hosts); bigger ones
+# are evaluated relationally against the rules table (a multi-host
+# frontier, where a driver-compiled expression would blow up codegen)
 ROBOTS_EXPR_MAX_RULES = 64
 # seen-tier probe tasks = n_shards * PROBE_SALT (each task still holds
 # ONE shard's table)
@@ -105,8 +107,6 @@ TRUNCATE_EVERY = 4
 # checkpoint table name of the seen tier's shard table
 TIER_TABLE = "cuckoo"
 SEEN_MODES = ("exact", "cuckoo")
-CANONICALIZERS = ("jvm", "pandas")
-ROBOTS_MODES = ("auto", "expr", "join")
 
 
 def minhash_ab(n: int) -> tuple[tuple[int, int], ...]:
@@ -197,10 +197,6 @@ class CrawlConfig:
     # host — the multi-host frontier mode the 10^10-URL north rule
     # actually runs at (same-host is then just one more predicate).
     same_host_only: bool = True
-    # "jvm" = whole-stage-codegen canonicalizer (default hot path);
-    # "pandas" = the Arrow-batched UDF (X2 extension surface) —
-    # bit-identical semantics, tested against each other.
-    canonicalizer: str = "jvm"
     politeness_max_per_host_per_wave: int | None = None
     checkpoint_dir: str | None = None
     update_hrefs: bool = False
@@ -223,13 +219,6 @@ class CrawlConfig:
     # X3: the UA string grobotstxt group-selection matches against
     # (reference crawler.go:60,442).
     user_agent: str = "webcrawlerGo"
-    # robots evaluation strategy: "expr" compiles the rules into a
-    # whole-stage-codegen CASE chain (zero shuffle — right for one or
-    # a few hosts); "join" evaluates relationally against a broadcast
-    # rules table (right for a multi-host frontier with many rule
-    # sets, where a driver-compiled expression would blow up codegen);
-    # "auto" switches on rule-set size (ROBOTS_EXPR_MAX_RULES).
-    robots_mode: str = "auto"
     # exact per-request virtual-time politeness (T1 fidelity): when
     # on, every event carries fetch_seq (its 1-based position in its
     # host's wave queue) and virtual_ms (wave base + (seq-1) × delay),
@@ -246,14 +235,8 @@ class CrawlConfig:
         # an empty string would otherwise match every URL (ADVICE r1)
         self.marked_paths = [p for p in self.marked_paths if p]
         self.ignore_patterns = [p for p in self.ignore_patterns if p]
-        for name, allowed in (
-            ("seen_mode", SEEN_MODES),
-            ("canonicalizer", CANONICALIZERS),
-            ("robots_mode", ROBOTS_MODES),
-        ):
-            value = getattr(self, name)
-            if value not in allowed:
-                raise ValueError(f"{name} must be one of {allowed}, got {value!r}")
+        if self.seen_mode not in SEEN_MODES:
+            raise ValueError(f"seen_mode must be one of {SEEN_MODES}, got {self.seen_mode!r}")
         if self.content_minhash and not self.analyze_pages:
             raise ValueError("content_minhash=True requires analyze_pages=True")
 
@@ -321,10 +304,6 @@ class WaveState:
             d.result() if isinstance(d, Future) and (wait or d.done()) else d
             for d in self.page_stats
         ]
-
-
-def _host(col):
-    return F.regexp_extract(col, r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#:]+)", 1)
 
 
 def _overflow_metric():
@@ -555,19 +534,11 @@ class CrawlEngine:
         self.base_host = config.base_url.split("://", 1)[1].split("/", 1)[0].split(":")[0]
         self._rules_df = parse_robots_rules(spark, robots_rows, user_agent=config.user_agent)
         rules = self._rules_df.collect()
-        use_expr = config.robots_mode == "expr" or (
-            config.robots_mode == "auto" and len(rules) <= ROBOTS_EXPR_MAX_RULES
-        )
-        if use_expr:
+        if len(rules) <= ROBOTS_EXPR_MAX_RULES:
             self._robots_ok = robots_ok_expr([tuple(r) for r in rules])
         else:
             self._robots_ok = None  # relational path (robots_allowed join)
             self._rules_df = self._rules_df.localCheckpoint(eager=True)
-        if config.canonicalizer == "pandas":
-            udf = make_normalize_udf(config.base_url)
-            self._normalize = lambda col: udf(col)
-        else:
-            self._normalize = lambda col: normalize_expr(config.base_url, col)
 
     def _empty(self, schema: str) -> DataFrame:
         return local_df(self.spark, [], schema)
@@ -614,7 +585,7 @@ class CrawlEngine:
         marked = F.lit(False)
         for m in cfg.marked_paths:
             marked = marked | F.col("url").contains(m)
-        host = _host(F.col("url"))
+        host = host_expr(F.col("url"))
         mon, alive = F.col("is_monitored"), F.col("is_alive")
         eligible = alive & ~ignore_hit & (host == F.lit(self.base_host))
         expiry = F.coalesce(F.col("last_saved"), F.lit(0.0)) + F.lit(
@@ -1051,7 +1022,7 @@ class CrawlEngine:
             self._with_spans(ok).select("url", "event_rank", "depth", "spans"),
             id_cols=["url", "event_rank", "depth"],
         ).withColumnRenamed("url", "parent_url")
-        norm = raw_links.withColumn("_n", self._normalize(F.col("raw_href"))).select(
+        norm = raw_links.withColumn("_n", normalize_expr(cfg.base_url, F.col("raw_href"))).select(
             "parent_url", "event_rank", "depth", "span_offset", "link_pos",
             F.col("_n.href").alias("href"), F.col("_n.scheme").alias("scheme"),
             F.col("_n.host").alias("host"), F.col("_n.path").alias("path"),

@@ -156,7 +156,7 @@ def get_spark(
     # WindowExec's "no partition defined" warning is an accident
     # detector; the engine's only unpartitioned windows are the
     # DELIBERATE small-batch paths (plans/rank.py: below 100k rows one
-    # task beats the 3-job distributed recipe). Silence that one
+    # task beats the distributed recipe's jobs). Silence that one
     # logger — every at-scale window in the engine is partitioned.
     try:
         jvm = spark.sparkContext._jvm
