@@ -157,3 +157,30 @@ def test_virtual_time_exact_single_worker(spark, web, web_dfs):
         assert r["fetch_seq"] is not None
         assert r["virtual_ms"] == r["event_rank"] * delay, (
             r["event_rank"], r["virtual_ms"])
+
+
+def test_registry_row_wins_on_rediscovery(spark, web, web_dfs):
+    """An off-host resume registry row that a multi-host crawl
+    rediscovers stays ONE row with its own flags: the reference's urls
+    insert is ignored when the URL already exists (golden.py
+    urls_insert), so the crawl only dead-marks or stamps that row."""
+    from pyspark.sql import functions as F
+
+    from webcrawlergo_spark.sources.synthweb import FOREIGN_URL
+
+    stamp = 1_700_000_000.0 - 60
+    df = spark.createDataFrame(
+        [(1, FOREIGN_URL, True, True, stamp)],
+        "id long, url string, is_monitored boolean, is_alive boolean, last_saved double",
+    )
+    # wave 2 links the URL (depth 3), wave 3 fetches it: a 404
+    res = run_engine(spark, web, web_dfs, same_host_only=False, max_waves=4).run(resume_urls=df)
+    # non-vacuity: off-host, so the resume load left it out of the
+    # seen set, and the crawl found it again and dead-marked it
+    assert FOREIGN_URL in {r["url"] for r in res.seen.collect()}
+    assert res.events.filter((F.col("url") == FOREIGN_URL) & (F.col("status") == "notfound")).count()
+    rows = res.urls.collect()
+    assert len(rows) == len({r["url"] for r in rows})
+    assert [
+        (r["is_monitored"], r["is_alive"], r["last_saved"]) for r in rows if r["url"] == FOREIGN_URL
+    ] == [(True, False, stamp)]

@@ -3,9 +3,12 @@ drop all in-memory state, resume from the Parquet-manifest
 checkpoint, and assert the final state is identical to an
 uninterrupted run (SURVEY §5.4)."""
 
+import json
 import os
+import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from webcrawlergo_spark.functions.urlnorm import host_expr
@@ -350,3 +353,87 @@ def test_resume_refuses_cross_format_signatures(spark, web, web_dfs):
                     analyze_pages=True, content_minhash=True,
                 ),
             ).run(resume=True)
+
+
+def _base_cfg(web, **kw):
+    return dict(
+        base_url=web.base_url, marked_paths=web.marked_paths,
+        ignore_patterns=web.ignore_patterns, **kw,
+    )
+
+
+@pytest.fixture(scope="module")
+def two_wave_ckpt(spark, web, web_dfs, tmp_path_factory):
+    """The checkpoint of a crawl killed after 2 waves."""
+    ckpt = str(tmp_path_factory.mktemp("two_wave"))
+    CrawlEngine(
+        spark, web_dfs["index"], web_dfs["docs"], web_dfs["robots"],
+        CrawlConfig(**_base_cfg(web, checkpoint_dir=ckpt, max_waves=2)),
+    ).run()
+    return ckpt
+
+
+def test_manifest_logs_registry_once(spark, web, web_dfs, two_wave_ckpt, tmp_path):
+    """The urls registry is no snapshot: the starting registry is an
+    append log written by the first commit only, and a checkpoint
+    without that log refuses to resume."""
+    m = CheckpointStore(two_wave_ckpt).latest()
+    assert m["wave_id"] == 1
+    assert sorted(m["tables"]) == ["fetch_flags", "frontier", "invalid", "seen"]
+    assert len(m["append_tables"]["registry"]) == 1
+    assert len(m["append_tables"]["events"]) == 2
+
+    legacy = str(tmp_path / "legacy")
+    shutil.copytree(two_wave_ckpt, legacy)
+    del m["append_tables"]["registry"]
+    with open(os.path.join(legacy, "_manifest.json"), "w") as f:
+        json.dump(m, f)
+    with pytest.raises(RuntimeError, match="registry"):
+        CrawlEngine(
+            spark, web_dfs["index"], web_dfs["docs"], web_dfs["robots"],
+            CrawlConfig(**_base_cfg(web, checkpoint_dir=legacy)),
+        ).run(resume=True)
+
+
+def test_fresh_run_into_used_checkpoint_dir_raises(spark, web, web_dfs, two_wave_ckpt):
+    """A run without resume=True must not commit into a directory that
+    holds another crawl (its commits would inherit that crawl's logs),
+    and the refusal leaves the checkpoint as it was."""
+    path = os.path.join(two_wave_ckpt, "_manifest.json")
+    with open(path) as f:
+        before = f.read()
+    with pytest.raises(ValueError, match="resume=True") as err:
+        CrawlEngine(
+            spark, web_dfs["index"], web_dfs["docs"], web_dfs["robots"],
+            CrawlConfig(**_base_cfg(web, checkpoint_dir=two_wave_ckpt)),
+        ).run()
+    assert two_wave_ckpt in str(err.value)
+    with open(path) as f:
+        assert f.read() == before
+
+
+def test_page_stats_survive_kill_and_resume(spark, web, web_dfs):
+    """The page_stats log is committed with the wave, so a resumed
+    analyze_pages crawl returns the stats of the waves before the kill
+    too (content minhash on: the resume reads the bigint mh columns)."""
+    cfg = _base_cfg(web, analyze_pages=True, content_minhash=True)
+
+    def stats(res):
+        return sorted(tuple(sorted(r.asDict().items())) for r in res.page_stats.collect())
+
+    full = CrawlEngine(
+        spark, web_dfs["index"], web_dfs["docs"], web_dfs["robots"],
+        CrawlConfig(**cfg, max_waves=4),
+    ).run()
+    assert full.waves == 4  # the kill below is mid-crawl
+    want = stats(full)
+    with tempfile.TemporaryDirectory() as ckpt:
+        CrawlEngine(
+            spark, web_dfs["index"], web_dfs["docs"], web_dfs["robots"],
+            CrawlConfig(**cfg, checkpoint_dir=ckpt, max_waves=2),
+        ).run()
+        res = CrawlEngine(
+            spark, web_dfs["index"], web_dfs["docs"], web_dfs["robots"],
+            CrawlConfig(**cfg, checkpoint_dir=ckpt, max_waves=4),
+        ).run(resume=True)
+        assert stats(res) == want

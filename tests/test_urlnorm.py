@@ -4,7 +4,7 @@ with the golden's per-string normalization on the full href taxonomy
 
 import pandas as pd
 
-from webcrawlergo_spark.functions.urlnorm import _canon_one, _normalize_pd
+from webcrawlergo_spark.functions.urlnorm import _normalize_pd
 from webcrawlergo_spark.golden import normalize_href
 
 BASE = "https://host0.test"
@@ -51,13 +51,6 @@ def test_normalize_parse_fields():
     assert out.loc[1, "scheme"] == "mailto"
     assert out.loc[2, "host"] == "other.test"
     assert out.loc[2, "path"] == "/a/b"
-
-
-def test_full_canonicalizer_rfc3986():
-    assert _canon_one("HTTPS://Host.Test/a%7Eb?b=2&a=1") == "https://host.test/a~b?a=1&b=2"
-    # idempotent
-    c = _canon_one("https://h.test/x%20y?z=1&y=2")
-    assert _canon_one(c) == c
 
 
 def test_expr_and_pandas_paths_agree_on_adversarial_corpus(spark):

@@ -29,7 +29,10 @@ def main() -> None:
     p.add_argument("--seen-mode", default="exact", choices=["exact", "cuckoo"])
     p.add_argument("--marked", nargs="*", default=[])
     p.add_argument("--ignore", nargs="*", default=[])
-    p.add_argument("--resume", action="store_true")
+    p.add_argument(
+        "--resume", action="store_true",
+        help="continue the crawl in --checkpoint-dir; without it the directory must be empty",
+    )
     p.add_argument("--same-host-only", action="store_true")
     p.add_argument("--max-waves", type=int, default=10_000)
     args = p.parse_args()

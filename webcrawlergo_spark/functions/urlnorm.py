@@ -8,14 +8,9 @@ scheme/host/path.
 
 The engine runs ``normalize_expr`` (JVM codegen); ``_normalize_pd``
 and its UDF are the pandas reference twin the tests check it against.
-The full RFC 3986 canonical form (north rule) percent-decodes per
-element, so it runs on *unique* values only (`canonicalize_full_udf`),
-the standard dedup-then-map vectorization trick.
 """
 
 from __future__ import annotations
-
-from urllib.parse import quote, unquote, urlsplit
 
 import pandas as pd
 from pyspark.sql import functions as F, types as T
@@ -116,27 +111,3 @@ def normalize_expr(base_url: str, raw):
         path.alias("path"),
     )
 
-
-def _canon_one(href: str) -> str:
-    """Full RFC 3986 canonical form (north-rule extension, not used on
-    the reference-parity path): lowercase scheme+host, decode unreserved
-    percent-escapes, re-encode, sort query params."""
-    p = urlsplit(href)
-    path = quote(unquote(p.path), safe="/:@!$&'()*+,;=~-._")
-    query = "&".join(sorted(q for q in p.query.split("&") if q))
-    out = f"{p.scheme.lower()}://{p.netloc.lower()}{path or ''}"
-    if query:
-        out += f"?{query}"
-    return out
-
-
-def canonicalize_full_udf():
-    """Vectorized-by-uniques full canonicalizer."""
-
-    @F.pandas_udf(T.StringType())
-    def canon(raw: pd.Series) -> pd.Series:
-        uniq = raw.dropna().unique()
-        table = {u: _canon_one(u) for u in uniq}
-        return raw.map(table)
-
-    return canon

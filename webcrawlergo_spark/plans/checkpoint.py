@@ -12,6 +12,14 @@ Layout:
     <root>/<table>/wave=<n>/*.parquet     immutable snapshot data
     <root>/_manifest.json.tmp → rename → <root>/_manifest.json
 
+The crawl engine (plans/wave.py) commits two kinds of table. Its
+snapshots, rewritten every wave, are ``frontier``, ``seen``,
+``fetch_flags``, ``invalid`` and the seen tier's ``cuckoo`` shards.
+Its append logs, one delta per wave, are ``events``, ``pages``,
+``lineage`` and ``page_stats`` (when the crawl analyzes pages), plus
+``registry``: the urls registry the crawl started from, written once
+by its first commit. A checkpoint directory holds one crawl.
+
 A manifest names the exact wave directory per table, so a crash
 between table writes and the rename leaves the previous manifest
 (and therefore the previous consistent state) in force — the
@@ -77,10 +85,7 @@ class CheckpointStore:
         for name, path in m["tables"].items():
             if not os.path.exists(path):
                 raise ValueError(f"snapshot data for wave {wave_id} table {name} was GC'd")
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, self._manifest_path)
+        self._write_json_atomic(self._manifest_path, m)
         return m
 
     def commit(
@@ -179,31 +184,28 @@ class CheckpointStore:
             raise ValueError(
                 f"no manifest for wave {wave_id} (history keeps {self.keep_last})"
             )
-        if table in m["tables"]:
-            path = m["tables"][table]
-            if not os.path.exists(path):
-                raise ValueError(f"snapshot data for wave {wave_id} table {table} was GC'd")
-            return spark.read.parquet(path)
-        paths = m.get("append_tables", {}).get(table)
-        if paths:
-            missing = [p for p in paths if not os.path.exists(p)]
-            if missing:
-                raise ValueError(
-                    f"append data for wave {wave_id} table {table} was GC'd: {missing}"
-                )
-            return spark.read.parquet(*paths)
-        return None
+        paths = self._paths(m, table)
+        missing = [p for p in paths if not os.path.exists(p)]
+        if missing:
+            raise ValueError(f"data for wave {wave_id} table {table} was GC'd: {missing}")
+        return spark.read.parquet(*paths) if paths else None
 
-    def load(self, spark: SparkSession, table: str) -> DataFrame | None:
+    def load(self, spark: SparkSession, table: str, schema=None) -> DataFrame | None:
+        """``table`` as the latest manifest has it, or None. A known
+        ``schema`` (DDL or StructType) spares the read Spark's
+        schema-inference job."""
         m = self.latest()
-        if m is None:
+        paths = self._paths(m, table) if m else []
+        if not paths:
             return None
+        return (spark.read.schema(schema) if schema else spark.read).parquet(*paths)
+
+    @staticmethod
+    def _paths(m: dict, table: str) -> list[str]:
+        """A snapshot table's one dir, or an append log's delta dirs."""
         if table in m["tables"]:
-            return spark.read.parquet(m["tables"][table])
-        paths = m.get("append_tables", {}).get(table)
-        if paths:
-            return spark.read.parquet(*paths)
-        return None
+            return [m["tables"][table]]
+        return m.get("append_tables", {}).get(table, [])
 
     def _gc(self, keep_wave: int, keep_last: int | None = None, protect: dict | None = None) -> None:
         """Drop snapshot dirs older than the last ``keep_last`` waves,
@@ -230,6 +232,3 @@ class CheckpointStore:
                 path = os.path.join(tdir, d)
                 if w not in keep_ids and path not in protected:
                     shutil.rmtree(path, ignore_errors=True)
-
-    def destroy(self) -> None:
-        shutil.rmtree(self.root, ignore_errors=True)

@@ -15,8 +15,14 @@ DataFrames. One wave is a sequence of phases over a ``WaveState``:
   seen-set dedup     first-encounter dedup (J2, operators/seenset.py:
                      exact anti-join, or the ``SeenTier`` cuckoo-shard
                      prefilter + exact confirm)
-  state merge        urls flags, pages append, seen, invalid, lineage
+  state merge        pages append, seen, queue-map values, next
+                     frontier, lineage
   commit             checkpoint commit (T5)
+
+The urls registry (S6/S7) is not wave state: its only changes are an
+insert-ignore, a 404 dead-mark and a save stamp, and the seen set, the
+events log and the pages log record all three, so ``CrawlResult.urls``
+is a view over them and the registry the crawl started from.
 
 FIFO-order equivalence: the reference's single-worker queue processes
 items in enqueue order; every item enqueued during wave w is
@@ -54,6 +60,7 @@ from ..functions.urlnorm import host_expr, normalize_expr
 from ..operators.linkextract import extract_links
 from ..operators.sampling import salted_topk_split
 from ..operators.seenset import (
+    CUCKOO_SHARDS_SCHEMA,
     _cuckoo_buckets_for,
     build_cuckoo_shards,
     cuckoo_insert_shards,
@@ -149,6 +156,10 @@ class CrawlConfig:
     retry_times: int = 2
     request_delay_ms: int = 50
     update_days: int = 1
+    # the crawl's clock: T7 expiry on the resume load, and the
+    # last_saved stamp of every save in the result registry. A
+    # checkpoint resume stamps the pre-kill saves too with the
+    # resuming engine's value.
     now_ts: float = 1_700_000_000.0
     # "exact" | "cuckoo". Cuckoo = the executor-side shard-table tier
     # (SeenTier): a probe splits the wave's candidates into
@@ -244,7 +255,9 @@ class CrawlConfig:
 @dataclass
 class CrawlResult:
     events: DataFrame      # (event_rank, wave_id, url, status) — every dequeue
-    urls: DataFrame        # registry with flags
+    # registry with flags: a lazy view over the starting registry, the
+    # seen set and the events/pages logs (CrawlEngine._registry)
+    urls: DataFrame
     pages: DataFrame       # saved content log (url, doc_id, event_rank)
     seen: DataFrame        # the queue-map key set
     invalid: DataFrame     # known-invalid cache
@@ -267,7 +280,9 @@ class WaveState:
     """Everything a wave hands to the next."""
 
     frontier: DataFrame
-    urls: DataFrame
+    # the urls registry the crawl started from (seed, resume and bulk
+    # seed rows); never changes during the crawl
+    registry: DataFrame
     seen: DataFrame
     # the queue map's *value* side (reference queue/queue.go:15-17) —
     # shared mutable state, kept as its own table because duplicate
@@ -316,6 +331,14 @@ def _overflow_metric():
     return F.max(
         ((F.col("n_fail") > 0) | (F.col("n") * 100 > F.col("n_buckets") * 4 * 84)).cast("long")
     ).alias("overflow")
+
+
+def _registry_rows(df: DataFrame, monitored: str) -> DataFrame:
+    """New urls-registry rows: alive and never saved."""
+    return df.select(
+        "url", F.col(monitored).alias("is_monitored"),
+        F.lit(True).alias("is_alive"), F.lit(None).cast("double").alias("last_saved"),
+    )
 
 
 def _reread(entry: dict, tables: dict[str, DataFrame], name: str) -> DataFrame:
@@ -369,9 +392,7 @@ class SeenTier:
         if self.min_seen is None:
             return
         self.n_seen_est = seen.count()
-        loaded = (
-            store.load(seen.sparkSession, TIER_TABLE) if store is not None and store.latest() else None
-        )
+        loaded = store and store.load(seen.sparkSession, TIER_TABLE, CUCKOO_SHARDS_SCHEMA)
         if loaded is None:
             self._gate_build(seen)
             return
@@ -412,8 +433,8 @@ class SeenTier:
         if store is None:
             self.df = rebuilt.localCheckpoint(eager=True)
         else:
-            entry = store.amend(TIER_TABLE, rebuilt, tag, meta=self.pins())
-            self.df = keys.sparkSession.read.parquet(entry["tables"][TIER_TABLE])
+            store.amend(TIER_TABLE, rebuilt, tag, meta=self.pins())
+            self.df = store.load(keys.sparkSession, TIER_TABLE, CUCKOO_SHARDS_SCHEMA)
         self.chain = 0
 
     def probe(
@@ -559,7 +580,7 @@ class CrawlEngine:
     def _seed_frontier(
         self, resume_urls: DataFrame | None
     ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-        """Returns (frontier, urls, seen, fetch_flags) mirroring
+        """Returns (frontier, registry, seen, fetch_flags) mirroring
         beginCrawl + loadUrlsToQueue."""
         cfg = self.cfg
         spark = self.spark
@@ -611,7 +632,7 @@ class CrawlEngine:
             "is_alive",
             "last_saved",
         )
-        urls = resume_tbl.unionByName(seed_urls.join(resume_tbl, "url", "left_anti"))
+        registry = resume_tbl.unionByName(seed_urls.join(resume_tbl, "url", "left_anti"))
 
         # map entries: dead rows + every eligible row; fetch rows carry
         # flag=true (InsertForce(false) then SetMapValue(true), init.go:93-94)
@@ -637,7 +658,7 @@ class CrawlEngine:
             F.col("_fetch").alias("should_fetch"),
             F.lit(0).alias("retry_count"),
         )
-        return seed_frontier.unionByName(resume_frontier), urls, seen, fetch_flags
+        return seed_frontier.unionByName(resume_frontier), registry, seen, fetch_flags
 
     def _load(
         self, store: CheckpointStore | None, resume: bool,
@@ -648,7 +669,7 @@ class CrawlEngine:
         bulk seed rows)."""
         cfg = self.cfg
         spark = self.spark
-        m = store.latest() if (resume and store) else None
+        m = store.latest() if store else None  # run() refused a used dir without resume
         if m:
             fmt = int((m.get("meta") or {}).get("stats_format", 1))
             if cfg.analyze_pages and cfg.content_minhash and fmt != STATS_FORMAT:
@@ -658,19 +679,31 @@ class CrawlEngine:
                     "signatures, r5); discard the checkpoint or re-crawl — "
                     "resuming would mix signature column types (ADVICE r5)"
                 )
+            # the known schemas spare the reads their inference jobs
             st = WaveState(
-                *(store.load(spark, n) for n in ("frontier", "urls", "seen", "fetch_flags", "invalid")),
+                *(store.load(spark, n, ddl) for n, ddl in (
+                    ("frontier", FRONTIER_COLS), ("registry", URLS_COLS), ("seen", URL_COLS),
+                    ("fetch_flags", FLAGS_COLS), ("invalid", URL_COLS),
+                )),
                 store=store,
                 event_base=int(m["meta"]["event_base"]),
                 virtual_base_ms=int(m["meta"].get("virtual_base_ms", 0)),
                 wave_id=int(m["wave_id"]) + 1,
             )
-            for deltas, name in ((st.events, "events"), (st.pages, "pages"), (st.lineage, "lineage")):
-                prior = store.load(spark, name)
+            if st.registry is None:
+                raise RuntimeError(
+                    f"checkpoint {store.root} predates the registry log this engine "
+                    "resumes the urls registry from; discard the checkpoint or re-crawl"
+                )
+            for deltas, name, ddl in (
+                (st.events, "events", EVENTS_COLS), (st.pages, "pages", PAGES_COLS),
+                (st.lineage, "lineage", LINEAGE_COLS), (st.page_stats, "page_stats", self._stats_cols()),
+            ):
+                prior = store.load(spark, name, ddl)
                 if prior is not None:
                     deltas.append(prior)
         else:
-            frontier, urls, seen, fetch_flags = self._seed_frontier(resume_urls)
+            frontier, registry, seen, fetch_flags = self._seed_frontier(resume_urls)
             if extra_frontier is not None:
                 frontier = frontier.unionByName(extra_frontier)
                 seen = seen.unionByName(extra_frontier.select("url")).distinct()
@@ -681,13 +714,11 @@ class CrawlEngine:
                     extra_frontier.select("url", F.col("should_fetch").alias("flag"))
                     .join(fetch_flags.select("url"), "url", "left_anti")
                 )
-                urls = urls.unionByName(
-                    extra_frontier.select(
-                        "url", F.col("should_fetch").alias("is_monitored"),
-                        F.lit(True).alias("is_alive"), F.lit(None).cast("double").alias("last_saved"),
-                    ).join(urls.select("url"), "url", "left_anti")
+                registry = registry.unionByName(
+                    _registry_rows(extra_frontier, "should_fetch")
+                    .join(registry.select("url"), "url", "left_anti")
                 )
-            st = WaveState(frontier, urls, seen, fetch_flags, self._empty(URL_COLS), store=store)
+            st = WaveState(frontier, registry, seen, fetch_flags, self._empty(URL_COLS), store=store)
         st.flags_live = (
             bool(cfg.marked_paths) or st.fetch_flags.filter(F.col("flag")).limit(1).count() > 0
         )
@@ -712,6 +743,12 @@ class CrawlEngine:
         their (parent_rank, span_offset) keys."""
         cfg = self.cfg
         store = CheckpointStore(cfg.checkpoint_dir) if cfg.checkpoint_dir else None
+        if store is not None and not resume and store.latest():
+            # a fresh crawl's commits must not inherit another crawl's logs
+            raise ValueError(
+                f"checkpoint dir {store.root} already holds a crawl: pass resume=True "
+                "to continue it, or use an empty directory"
+            )
         # Crawl-time analytics (the page_stats branch) depend only on
         # the wave's already-checkpointed `sim` + the static docs
         # table — they are independent of the NEXT wave's work. A
@@ -728,7 +765,7 @@ class CrawlEngine:
         try:
             st = self._load(store, resume, resume_urls, extra_frontier)
             self.tier = SeenTier(cfg)
-            self.tier.load(st.seen, store if resume else None)
+            self.tier.load(st.seen, store)
             while st.wave_id < cfg.max_waves:
                 st.settle_stats(wait=False)
                 if st.n_frontier == 0:
@@ -1002,11 +1039,8 @@ class CrawlEngine:
         # SHUFFLE_HASH, build = the narrow mh side: the groupBy's own
         # hash(event_rank) output feeds the join exchange-free, and
         # neither side pays a sort
-        mh_cols = [f"mh{i}" for i in range(CONTENT_MINHASH_SEEDS)]
-        return stats.join(mh.hint("shuffle_hash"), "event_rank").select(
-            "url", "event_rank", "n_chars", "n_tokens",
-            "marker_hits", "fingerprint", "n_media", *mh_cols,
-        )
+        joined = stats.join(mh.hint("shuffle_hash"), "event_rank")
+        return joined.select(*stats.columns, *mh.columns[1:])
 
     def _extract(
         self, st: WaveState, ok: DataFrame
@@ -1166,10 +1200,10 @@ class CrawlEngine:
         self, st: WaveState, sim: DataFrame, ok: DataFrame, deferred: DataFrame,
         firsts: DataFrame, new_urls: DataFrame, n_frontier: int,
     ) -> tuple[DataFrame, DataFrame]:
-        """State MERGE + lineage: the pages delta, the urls registry
-        (S6/S7 without row CAS), seen, the queue-map values and the
-        next frontier (size ``n_frontier``). Returns the wave's pages
-        and lineage deltas."""
+        """State MERGE + lineage: the pages delta, seen, the queue-map
+        values and the next frontier (size ``n_frontier``). Returns the
+        wave's pages and lineage deltas. The urls registry needs no
+        merge: ``_registry`` derives it from the logs at the result."""
         cfg = self.cfg
         enqueued = new_urls.select(
             "url", "host", "depth", "parent_rank", "span_offset", "link_pos",
@@ -1181,37 +1215,6 @@ class CrawlEngine:
         wave_pages = self._save_pages(ok)
         st.pages.append(wave_pages)
 
-        # A content save sets last_saved = now (reference
-        # savePageContent, crawler.go:353-355) — without it the
-        # engine's own output registry can't drive T7 re-crawl expiry
-        # on a later run. The wave's dead-marks and saves fold into ONE
-        # per-url outcome frame, so the O(history) registry goes
-        # through one join (one shuffle) per wave. (With no marked
-        # paths and no live flags nothing is saved: the pages branch
-        # is a constant-false filter the optimizer prunes.)
-        dead = sim.filter(~F.col("transport_fail") & (F.col("http_status") == 404)).select("url")
-        outcome = (
-            dead.select("url", F.lit(True).alias("_dead"), F.lit(False).alias("_saved"))
-            .unionByName(
-                wave_pages.select("url", F.lit(False).alias("_dead"), F.lit(True).alias("_saved"))
-            )
-            .groupBy("url")
-            .agg(F.max("_dead").alias("_dead"), F.max("_saved").alias("_saved"))
-        )
-        st.urls = (
-            st.urls.join(outcome, "url", "left")
-            .withColumn("is_alive", F.when(F.col("_dead"), F.lit(False)).otherwise(F.col("is_alive")))
-            .withColumn(
-                "last_saved",
-                F.when(F.col("_saved"), F.lit(float(cfg.now_ts))).otherwise(F.col("last_saved")),
-            )
-            .drop("_dead", "_saved")
-        ).unionByName(
-            new_urls.select(
-                "url", F.col("marked").alias("is_monitored"),
-                F.lit(True).alias("is_alive"), F.lit(None).cast("double").alias("last_saved"),
-            )
-        )
         # enqueued is already wave-distinct AND anti-joined vs seen,
         # so a plain union keeps `seen` duplicate-free — no distinct
         st.seen = st.seen.unionByName(enqueued.select("url"))
@@ -1254,7 +1257,6 @@ class CrawlEngine:
 
         if st.store is None and st.wave_id % TRUNCATE_EVERY == TRUNCATE_EVERY - 1:
             st.seen = st.seen.localCheckpoint(eager=True)
-            st.urls = st.urls.localCheckpoint(eager=True)
         return wave_pages, lin
 
     def _lineage(
@@ -1306,10 +1308,19 @@ class CrawlEngine:
         )
 
     def _commit(self, st: WaveState, appends: dict[str, DataFrame]) -> None:
-        """Checkpoint commit (T5) of the wave's state and its append-log
-        deltas, then read the state back from the snapshot."""
+        """Checkpoint commit (T5) of the wave's state snapshots and its
+        append-log deltas, then read the snapshots back. The crawl's
+        first commit also logs the starting registry."""
+        if self.cfg.analyze_pages:
+            # the stats log is committed too, so this wave's delta must
+            # be finished: stats overlap this wave's later phases, not
+            # the next wave
+            st.settle_stats(wait=True)
+            appends = {**appends, "page_stats": st.page_stats[-1]}
+        if st.store.latest() is None:
+            appends = {**appends, "registry": st.registry}
         tables = {
-            "frontier": st.frontier, "urls": st.urls, "seen": st.seen,
+            "frontier": st.frontier, "seen": st.seen,
             "fetch_flags": st.fetch_flags, "invalid": st.invalid,
         }
         entry = self.tier.commit(
@@ -1326,20 +1337,54 @@ class CrawlEngine:
                 "stats_format": STATS_FORMAT,
             },
         )
-        for name in ("seen", "urls", "invalid", "frontier") + (("fetch_flags",) if st.flags_live else ()):
+        for name in ("seen", "invalid", "frontier") + (("fetch_flags",) if st.flags_live else ()):
             setattr(st, name, _reread(entry, tables, name))
+
+    def _stats_cols(self) -> str:
+        mh = "".join(f", mh{i} bigint" for i in range(CONTENT_MINHASH_SEEDS))
+        return PAGE_STATS_COLS + (mh if self.cfg.content_minhash else "")
+
+    def _registry(
+        self, registry: DataFrame, seen: DataFrame, events: DataFrame, pages: DataFrame
+    ) -> DataFrame:
+        """The urls registry (S6/S7) as a view over the crawl's logs: the
+        starting registry, plus every URL the crawl enqueued as a new
+        row (an existing row wins: the reference's insert-ignore,
+        golden.py), then one per-URL outcome: a 404 marks the row dead
+        (T4) and a content save sets last_saved = now (savePageContent,
+        crawler.go:353-355, which drives T7 re-crawl expiry)."""
+        found = seen.join(registry, "url", "left_anti")
+        found = marked_flag(found, self.cfg.marked_paths, url_col="url")
+        outcome = (
+            events.filter(F.col("status") == "notfound")
+            .select("url", F.lit(True).alias("_dead"), F.lit(False).alias("_saved"))
+            .unionByName(pages.select("url", F.lit(False).alias("_dead"), F.lit(True).alias("_saved")))
+            .groupBy("url")
+            .agg(F.max("_dead").alias("_dead"), F.max("_saved").alias("_saved"))
+        )
+        return (
+            registry.unionByName(_registry_rows(found, "marked"))
+            .join(outcome, "url", "left")
+            .select(
+                "url", "is_monitored",
+                F.when(F.col("_dead"), F.lit(False)).otherwise(F.col("is_alive")).alias("is_alive"),
+                F.when(F.col("_saved"), F.lit(float(self.cfg.now_ts)))
+                .otherwise(F.col("last_saved")).alias("last_saved"),
+            )
+        )
 
     def _result(self, st: WaveState) -> CrawlResult:
         def union_all(deltas: list[DataFrame], schema: str) -> DataFrame:
             return reduce(DataFrame.unionByName, deltas) if deltas else self._empty(schema)
 
+        events, pages = union_all(st.events, EVENTS_COLS), union_all(st.pages, PAGES_COLS)
         return CrawlResult(
-            events=union_all(st.events, EVENTS_COLS),
-            urls=st.urls,
-            pages=union_all(st.pages, PAGES_COLS),
+            events=events,
+            urls=self._registry(st.registry, st.seen, events, pages),
+            pages=pages,
             seen=st.seen,
             invalid=st.invalid,
             lineage=union_all(st.lineage, LINEAGE_COLS),
             waves=st.wave_id,
-            page_stats=union_all(st.page_stats, PAGE_STATS_COLS),
+            page_stats=union_all(st.page_stats, self._stats_cols()),
         )

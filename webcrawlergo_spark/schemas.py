@@ -70,15 +70,6 @@ FRONTIER = T.StructType(
     ]
 )
 
-# robots rules per host (reference crawler.go:477-514).
-ROBOTS = T.StructType(
-    [
-        T.StructField("host", T.StringType(), False),
-        T.StructField("rules", T.StringType(), True),        # raw robots.txt body
-        T.StructField("status", T.IntegerType(), False),     # 200 | 404 | 429 | 5xx
-    ]
-)
-
 # per-partition lineage row committed every wave (north rule).
 LINEAGE = T.StructType(
     [

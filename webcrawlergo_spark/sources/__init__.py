@@ -1,1 +1,1 @@
-from .tpch import load_table, load_tables  # noqa: F401
+from .tpch import load_table  # noqa: F401

@@ -29,7 +29,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..schemas import DOCS, ROBOTS
+from ..schemas import DOCS
 
 BASE_HOST = "host0.test"
 BASE_URL = f"https://{BASE_HOST}"
@@ -187,10 +187,6 @@ def web_index_df(spark: SparkSession, web: SynthWeb) -> DataFrame:
     return spark.createDataFrame(
         rows, "url string, doc_id string, status int, fail_times int"
     )
-
-
-def robots_df(spark: SparkSession, web: SynthWeb) -> DataFrame:
-    return spark.createDataFrame([(BASE_HOST, web.robots_txt, 200)], ROBOTS)
 
 
 def scale_web_df(spark: SparkSession, n_pages: int, links_per_page: int = 8,

@@ -50,13 +50,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown testdata table {name!r}; known: {TESTDATA_TABLES}")
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (SQL-path parity
-    with the DuckDB oracle, which sees the same names)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
