@@ -455,10 +455,8 @@ DRIVER_QUERY_CAP = 50
 
 
 def _reorder(full: dict) -> dict:
-    out = {k: full.pop(k) for k in EARLY_ORDER if k in full}
-    for k in RETIRED_FROM_DRIVER:
-        full.pop(k, None)
-    out.update(full)
+    live = {k: q for k, q in full.items() if k not in RETIRED_FROM_DRIVER}
+    out = {**{k: live[k] for k in EARLY_ORDER if k in live}, **live}
     assert len(out) <= DRIVER_QUERY_CAP, (
         f"{len(out)} registered queries exceed the driver's {DRIVER_QUERY_CAP}-row "
         "CORRECTNESS window — retire a redundant entry (RETIRED_FROM_DRIVER) "
@@ -470,43 +468,16 @@ def _reorder(full: dict) -> dict:
 def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Oracle queries kept off the driver's 50-row window but still
     exercised by tools/compare.py and pytest."""
-    return {
-        "latest_pages_count": q_latest_pages_count,
-        "ann_lsh_buckets": sim.QUERIES["ann_lsh_buckets"],
-        "ivf_cells": sim.QUERIES["ivf_cells"],
-        "href_token_extract": q_href_token_extract,
-        "urls_fetched": q_urls_fetched,
-        "multimodal_meta": multimodal_meta,
-        "token_length_buckets": tx.QUERIES["token_length_buckets"],
-        "sessionize_events": olap.QUERIES["sessionize_events"],
-        "window_paginate_orders": olap.QUERIES["window_paginate_orders"],
-        "stratified_sample": smp.QUERIES["stratified_sample"],
-        "kmeans_cells": sim.QUERIES["kmeans_cells"],
-        "ngram_jaccard_pairs": dd.QUERIES["ngram_jaccard_pairs"],
-        "timestamp_arith": q_timestamp_arith,
-        "url_by_id": q_url_by_id,
-        "user_event_seq": smp.QUERIES["user_event_seq"],
-        "monitored_alive": q_monitored_alive,
-        "latest_pages_export": q_latest_pages_export,
-        "date_format_events": olap.QUERIES["date_format_events"],
-        "union_retries_dedup": q_union_retries_dedup,
-        "topk_orders": q_topk_orders,
-        "group_agg_lineitem": q_group_agg_lineitem,
-        "domain_mix_weights": smp.QUERIES["domain_mix_weights"],
-        "cosine_topk": sim.QUERIES["cosine_topk"],
-        "minhash_signatures": dd.QUERIES["minhash_signatures"],
-        "embedding_neardup_pairs": sim.QUERIES["embedding_neardup_pairs"],
-        "ivf_topk": sim.QUERIES["ivf_topk"],
-        "pages_by_url": q_pages_by_url,
-        "token_count": tx.QUERIES["token_count"],
-        "simhash": dd.QUERIES["simhash"],
-        "doc_fingerprint": tx.QUERIES["doc_fingerprint"],
-        "cutoff_widening": q_cutoff_widening,
-        "frame_sample_plan": frame_sample_plan,
-    }
+    full = _all_queries()
+    return {k: full[k] for k in RETIRED_FROM_DRIVER}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return _reorder(_all_queries())
+
+
+def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every query: the ones ``queries()`` serves and the retired ones."""
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "latest_pages": q_latest_pages,
         "latest_pages_count": q_latest_pages_count,
@@ -528,17 +499,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "export_sanitized_paths": q_export_sanitized_paths,
         "cutoff_widening": q_cutoff_widening,
     }
-    q.update(asf.QUERIES)
-    q.update(gr.QUERIES)
-    q.update(sk.QUERIES)
-    q.update(st.QUERIES)
-    q.update(itv.QUERIES)
-    q.update(dd.QUERIES)
-    q.update(ret.QUERIES)
-    q.update(sim.QUERIES)
-    q.update(tx.QUERIES)
-    q.update(olap.QUERIES)
-    q.update(smp.QUERIES)
+    for module in (asf, gr, sk, st, itv, dd, ret, sim, tx, olap, smp):
+        q.update(module.QUERIES)
     q["link_extract_spans"] = link_extract_spans
     q["crawl_bfs_depth"] = crawl_bfs_depth
     q["anchor_text_agg"] = anchor_text_agg
@@ -573,7 +535,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (uncompressed 8-bit DIB frames), numpy RIFF/AVI parser in
     # mapInPandas, decoded-frame-stack md5 vs oracle
     q["video_decode_stats"] = video_decode_stats
-    return _reorder(q)
+    return q
 
 
 def oracle_sql() -> dict[str, str]:

@@ -10,8 +10,8 @@ import pytest
 
 from webcrawlergo_spark.operators.validate import ROBOTS_RULES_COLS
 from webcrawlergo_spark.plans.wave import (
+    CONTENT_MINHASH_SEEDS,
     EVENTS_COLS,
-    FLAGS_COLS,
     FRONTIER_COLS,
     LINEAGE_COLS,
     PAGE_STATS_COLS,
@@ -23,12 +23,15 @@ from webcrawlergo_spark.plans.wave import (
 )
 from webcrawlergo_spark.session import local_df
 
+# page_stats under content_minhash (CrawlEngine._stats_cols)
+MH_STATS_COLS = PAGE_STATS_COLS + "".join(f", mh{i} bigint" for i in range(CONTENT_MINHASH_SEEDS))
+
 # (rows, ddl) for every frame the engine builds from driver-side rows
 CASES = [
     ([("http://h/", "h", 0, -2, 0, 0, False, 0)], FRONTIER_COLS),
     ([("http://h/", False, True, None), ("http://h/a", True, False, 1.7e9)], URLS_COLS),
     ([("http://h/",)], URL_COLS),
-    ([("http://h/", False)], FLAGS_COLS),
+    ([("http://h/", 3, 10, 2, 1, "0" * 32, 0, *range(4294967304, 4294967312))], MH_STATS_COLS),
     ([("h", False, "/a*", 3, False, "^/a.*"), ("h", True, "", 0, True, None)], ROBOTS_RULES_COLS),
     ([(0, 7), (1, (1 << 62) + 1), (2, None)], "_pid int, _off long"),
     ([(0.5,), (0.99,)], "pct double"),
@@ -37,7 +40,7 @@ CASES = [
 ] + [
     ([], ddl)
     for ddl in (
-        FRONTIER_COLS, URLS_COLS, URL_COLS, FLAGS_COLS, EVENTS_COLS, PAGES_COLS,
+        FRONTIER_COLS, URLS_COLS, URL_COLS, MH_STATS_COLS, EVENTS_COLS, PAGES_COLS,
         LINEAGE_COLS, PAGE_STATS_COLS, ROBOTS_RULES_COLS,
     )
 ]
@@ -76,6 +79,6 @@ def test_engine_frames_stay_in_the_jvm(spark, web, web_dfs):
         "empty_frontier": engine._empty(FRONTIER_COLS),
         "robots_rules": engine._rules_df,
     }
-    for name, df in zip(("frontier", "urls", "seen", "flags"), engine._seed_frontier(None)):
+    for name, df in zip(("frontier", "urls", "seen", "pending"), engine._seed_frontier(None)):
         frames[name] = df
     assert {n: python_scans(df) for n, df in frames.items()} == {n: [] for n in frames}

@@ -5,7 +5,7 @@ The UniqueQueue maps onto DataFrame primitives:
   Insert (dedup)        → dedup_new_urls anti-join (J2)
   InsertForce           → unionByName (no dedup)
   Remove (FIFO)         → min enqueue key / with_global_rank order
-  GetMapValue/SetMap    → fetch_flags table semantics (wave engine)
+  GetMapValue/SetMap    → the wave engine's pending-save set
 """
 
 import pytest
@@ -75,7 +75,7 @@ def test_distributed_prefix_rejects_oversized_partitions(spark, monkeypatch):
 
 
 def test_fetch_flag_semantics(web, default_run):
-    # queue_test.go:128-171 GetMapValue/SetMapValue ≈ fetch_flags:
+    # queue_test.go:128-171 GetMapValue/SetMapValue ≈ the pending set:
     # never-pushed key absent; marked discovery true; save resets false
     res = default_run
     saved_urls = {r["url"] for r in res.pages.collect()}
@@ -122,11 +122,12 @@ def test_get_map_value_and_not_found(spark):
 
 def _rank_input(spark, n):
     """(id, k, host, v): k has ties (broken by id), one mega-host holds
-    half the rows, every 13th value is NULL."""
+    half the rows, every tenth host is NULL, every 13th value is NULL."""
     return spark.range(n).select(
         F.col("id"),
         F.pmod(F.col("id") * 31, F.lit(997)).alias("k"),
         F.when(F.col("id") % 2 == 0, F.lit("mega.test"))
+        .when(F.col("id") % 5 == 0, F.lit(None))
         .otherwise(F.concat(F.lit("h"), F.pmod(F.col("id"), 97)))
         .alias("host"),
         F.when(F.col("id") % 13 == 0, F.lit(None))
@@ -161,8 +162,8 @@ def test_prefix_paths_match_plain_window(spark, name, small, partitions):
     """Each rank name equals the plain window row for row on both paths
     (small: n_rows given; distributed: n_rows omitted, so the
     range-partition recipe runs even at test size) and for any
-    partition count — with start≠0, NULL values, a mega-host holding
-    half the rows and an empty frame."""
+    partition count — with start≠0, NULL values, NULL hosts (one
+    group), a mega-host holding half the rows and an empty frame."""
     call, plain = RANK_CASES[name]
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(partitions))

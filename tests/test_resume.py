@@ -375,24 +375,29 @@ def two_wave_ckpt(spark, web, web_dfs, tmp_path_factory):
 
 def test_manifest_logs_registry_once(spark, web, web_dfs, two_wave_ckpt, tmp_path):
     """The urls registry is no snapshot: the starting registry is an
-    append log written by the first commit only, and a checkpoint
-    without that log refuses to resume."""
+    append log written by the first commit only. The invalid hrefs are
+    a log too; the only snapshots are frontier, pending and seen. A
+    checkpoint without the registry log or the pending table refuses
+    to resume."""
     m = CheckpointStore(two_wave_ckpt).latest()
     assert m["wave_id"] == 1
-    assert sorted(m["tables"]) == ["fetch_flags", "frontier", "invalid", "seen"]
+    assert sorted(m["tables"]) == ["frontier", "pending", "seen"]
+    assert "invalid" in m["append_tables"]
     assert len(m["append_tables"]["registry"]) == 1
     assert len(m["append_tables"]["events"]) == 2
 
-    legacy = str(tmp_path / "legacy")
-    shutil.copytree(two_wave_ckpt, legacy)
-    del m["append_tables"]["registry"]
-    with open(os.path.join(legacy, "_manifest.json"), "w") as f:
-        json.dump(m, f)
-    with pytest.raises(RuntimeError, match="registry"):
-        CrawlEngine(
-            spark, web_dfs["index"], web_dfs["docs"], web_dfs["robots"],
-            CrawlConfig(**_base_cfg(web, checkpoint_dir=legacy)),
-        ).run(resume=True)
+    for kind, name in (("append_tables", "registry"), ("tables", "pending")):
+        legacy = str(tmp_path / f"without_{name}")
+        shutil.copytree(two_wave_ckpt, legacy)
+        old = json.loads(json.dumps(m))
+        del old[kind][name]
+        with open(os.path.join(legacy, "_manifest.json"), "w") as f:
+            json.dump(old, f)
+        with pytest.raises(RuntimeError, match="registry"):
+            CrawlEngine(
+                spark, web_dfs["index"], web_dfs["docs"], web_dfs["robots"],
+                CrawlConfig(**_base_cfg(web, checkpoint_dir=legacy)),
+            ).run(resume=True)
 
 
 def test_fresh_run_into_used_checkpoint_dir_raises(spark, web, web_dfs, two_wave_ckpt):

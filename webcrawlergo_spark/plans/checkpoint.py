@@ -14,11 +14,13 @@ Layout:
 
 The crawl engine (plans/wave.py) commits two kinds of table. Its
 snapshots, rewritten every wave, are ``frontier``, ``seen``,
-``fetch_flags``, ``invalid`` and the seen tier's ``cuckoo`` shards.
-Its append logs, one delta per wave, are ``events``, ``pages``,
-``lineage`` and ``page_stats`` (when the crawl analyzes pages), plus
-``registry``: the urls registry the crawl started from, written once
-by its first commit. A checkpoint directory holds one crawl.
+``pending`` (the URLs whose save is still owed) and the seen tier's
+``cuckoo`` shards. Its append logs, one delta per wave, are
+``events``, ``pages``, ``lineage``, ``invalid`` (only from waves that
+found an invalid href) and ``page_stats`` (when the crawl analyzes
+pages), plus ``registry``: the urls registry the crawl started from,
+written once by its first commit. A checkpoint directory holds one
+crawl.
 
 A manifest names the exact wave directory per table, so a crash
 between table writes and the rename leaves the previous manifest

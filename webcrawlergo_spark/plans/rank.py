@@ -108,10 +108,17 @@ def _prefix(
     # (AQE still broadcasts it when it is small). The recipe moves the
     # rows only once while this join broadcasts; a shuffle join is a
     # second exchange of them. Ungrouped, the table has #partitions rows.
+    offsets = offsets.withColumnRenamed("_pid", "_opid")
+    match = F.col("_pid") == F.col("_opid")
     if group is None:
         offsets = F.broadcast(offsets)
+    else:
+        # null-safe: the rows of a NULL group are one group, as on the
+        # small path's window
+        offsets = offsets.withColumnRenamed(group, "_ogroup")
+        match &= F.col(group).eqNullSafe(F.col("_ogroup"))
     pos = idx - F.col("_min") if v is None else F.col("_sum")
-    return local.join(offsets, on, "left").select(
+    return local.join(offsets, match, "left").select(
         *df.columns, (F.col("_off") + pos + start).cast("long").alias(out_col)
     )
 

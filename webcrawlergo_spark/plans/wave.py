@@ -15,9 +15,15 @@ DataFrames. One wave is a sequence of phases over a ``WaveState``:
   seen-set dedup     first-encounter dedup (J2, operators/seenset.py:
                      exact anti-join, or the ``SeenTier`` cuckoo-shard
                      prefilter + exact confirm)
-  state merge        pages append, seen, queue-map values, next
+  state merge        pages append, seen, pending saves, next
                      frontier, lineage
   commit             checkpoint commit (T5)
+
+A wave hands the next one only what it reads: the frontier, the seen
+set and ``pending`` (the queue map's true values a save has not yet
+consumed) are snapshots; everything else is an append log with one
+delta per wave. The known-invalid hrefs are such a log: validity is a
+pure function of the href, so no wave needs the earlier waves' verdicts.
 
 The urls registry (S6/S7) is not wave state: its only changes are an
 insert-ignore, a 404 dead-mark and a save stamp, and the seen set, the
@@ -132,7 +138,6 @@ def minhash_ab(n: int) -> tuple[tuple[int, int], ...]:
 FRONTIER_COLS = "url string, host string, depth int, parent_rank long, span_offset int, link_pos int, should_fetch boolean, retry_count int"
 URLS_COLS = "url string, is_monitored boolean, is_alive boolean, last_saved double"
 URL_COLS = "url string"
-FLAGS_COLS = "url string, flag boolean"
 EVENTS_COLS = (
     "event_rank long, wave_id int, url string, status string, "
     "fetch_seq long, virtual_ms long"
@@ -260,7 +265,7 @@ class CrawlResult:
     urls: DataFrame
     pages: DataFrame       # saved content log (url, doc_id, event_rank)
     seen: DataFrame        # the queue-map key set
-    invalid: DataFrame     # known-invalid cache
+    invalid: DataFrame     # every href judged invalid (the invalid log, distinct)
     lineage: DataFrame     # per-wave per-partition metrics
     waves: int = 0
     page_stats: DataFrame | None = None  # crawl-time analytics (analyze_pages)
@@ -284,11 +289,12 @@ class WaveState:
     # seed rows); never changes during the crawl
     registry: DataFrame
     seen: DataFrame
-    # the queue map's *value* side (reference queue/queue.go:15-17) —
-    # shared mutable state, kept as its own table because duplicate
-    # queue occurrences of one URL observe each other's updates
-    fetch_flags: DataFrame
-    invalid: DataFrame
+    # the URLs whose queue-map value (reference queue/queue.go:15-17)
+    # is true and not yet consumed by a save or a transport failure:
+    # resume fetch rows and bulk seed rows with should_fetch. Only
+    # those values matter: a discovery's value is its marked flag, and
+    # a marked URL is saved anyway. The set only shrinks.
+    pending: DataFrame
     # None: no commit read-back truncates lineage, so the loop
     # checkpoints state itself
     store: CheckpointStore | None = None
@@ -297,18 +303,16 @@ class WaveState:
     wave_id: int = 0
     # derived from observed counters every wave, never a count() job
     n_frontier: int = 0
-    # fast-path guards — python-side facts that let a wave skip whole
-    # plan sections (each skipped section = 1-2 jobs/wave): fetch-flag
-    # machinery only matters if some flag can ever be true; the
-    # invalid anti-join only once something is invalid
+    # pending is non-empty (checked once, at load): otherwise the waves
+    # skip the pending join and the per-URL consumption window
     flags_live: bool = False
-    invalid_nonempty: bool = False
     # append logs accumulate as per-wave deltas — unioned lazily,
     # checkpointed as deltas (O(wave), not O(history)); a page-stats
     # entry may still be an in-flight Future of its delta
     events: list[DataFrame] = field(default_factory=list)
     pages: list[DataFrame] = field(default_factory=list)
     lineage: list[DataFrame] = field(default_factory=list)
+    invalid: list[DataFrame] = field(default_factory=list)
     page_stats: list = field(default_factory=list)
 
     def settle_stats(self, wait: bool) -> None:
@@ -580,7 +584,7 @@ class CrawlEngine:
     def _seed_frontier(
         self, resume_urls: DataFrame | None
     ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-        """Returns (frontier, registry, seen, fetch_flags) mirroring
+        """Returns (frontier, registry, seen, pending) mirroring
         beginCrawl + loadUrlsToQueue."""
         cfg = self.cfg
         spark = self.spark
@@ -591,9 +595,8 @@ class CrawlEngine:
         )
         seed_urls = local_df(spark, [(base, False, True, None)], URLS_COLS)
         seed_seen = local_df(spark, [(base,)], URL_COLS)
-        seed_flags = local_df(spark, [(base, False)], FLAGS_COLS)
         if resume_urls is None:
-            return seed_frontier, seed_urls, seed_seen, seed_flags
+            return seed_frontier, seed_urls, seed_seen, self._empty(URL_COLS)
 
         # resume-load classification (init.go:21-106) as pure column
         # expressions — the registry is O(total URLs) and NEVER touches
@@ -634,13 +637,10 @@ class CrawlEngine:
         )
         registry = resume_tbl.unionByName(seed_urls.join(resume_tbl, "url", "left_anti"))
 
-        # map entries: dead rows + every eligible row; fetch rows carry
-        # flag=true (InsertForce(false) then SetMapValue(true), init.go:93-94)
+        # map entries: dead rows + every eligible row; fetch rows are
+        # pending (InsertForce(false) then SetMapValue(true), init.go:93-94)
         in_map = classified.filter(~F.col("is_alive") | F.col("_eligible"))
-        resume_flags = in_map.select("url", F.col("_fetch").alias("flag"))
-        fetch_flags = resume_flags.unionByName(
-            seed_flags.join(resume_flags, "url", "left_anti")
-        )
+        pending = classified.filter(F.col("_fetch")).select("url").distinct()
         seen = in_map.select("url").unionByName(seed_seen).distinct()
 
         # O3 seq: rank of enqueued rows under ORDER BY is_monitored ASC,
@@ -658,7 +658,7 @@ class CrawlEngine:
             F.col("_fetch").alias("should_fetch"),
             F.lit(0).alias("retry_count"),
         )
-        return seed_frontier.unionByName(resume_frontier), registry, seen, fetch_flags
+        return seed_frontier.unionByName(resume_frontier), registry, seen, pending
 
     def _load(
         self, store: CheckpointStore | None, resume: bool,
@@ -683,46 +683,44 @@ class CrawlEngine:
             st = WaveState(
                 *(store.load(spark, n, ddl) for n, ddl in (
                     ("frontier", FRONTIER_COLS), ("registry", URLS_COLS), ("seen", URL_COLS),
-                    ("fetch_flags", FLAGS_COLS), ("invalid", URL_COLS),
+                    ("pending", URL_COLS),
                 )),
                 store=store,
                 event_base=int(m["meta"]["event_base"]),
                 virtual_base_ms=int(m["meta"].get("virtual_base_ms", 0)),
                 wave_id=int(m["wave_id"]) + 1,
             )
-            if st.registry is None:
+            if st.registry is None or st.pending is None:
                 raise RuntimeError(
-                    f"checkpoint {store.root} predates the registry log this engine "
-                    "resumes the urls registry from; discard the checkpoint or re-crawl"
+                    f"checkpoint {store.root} predates the registry log and the pending "
+                    "table this engine resumes from; discard the checkpoint or re-crawl"
                 )
             for deltas, name, ddl in (
                 (st.events, "events", EVENTS_COLS), (st.pages, "pages", PAGES_COLS),
-                (st.lineage, "lineage", LINEAGE_COLS), (st.page_stats, "page_stats", self._stats_cols()),
+                (st.lineage, "lineage", LINEAGE_COLS), (st.invalid, "invalid", URL_COLS),
+                (st.page_stats, "page_stats", self._stats_cols()),
             ):
                 prior = store.load(spark, name, ddl)
                 if prior is not None:
                     deltas.append(prior)
         else:
-            frontier, registry, seen, fetch_flags = self._seed_frontier(resume_urls)
+            frontier, registry, seen, pending = self._seed_frontier(resume_urls)
             if extra_frontier is not None:
-                frontier = frontier.unionByName(extra_frontier)
-                seen = seen.unionByName(extra_frontier.select("url")).distinct()
                 # seed rows enter the queue map with their should_fetch
                 # flag (existing map entries win, like the seed insert) —
                 # without this a bulk-seed row never triggers a save
-                fetch_flags = fetch_flags.unionByName(
-                    extra_frontier.select("url", F.col("should_fetch").alias("flag"))
-                    .join(fetch_flags.select("url"), "url", "left_anti")
-                )
+                pending = pending.unionByName(
+                    extra_frontier.filter(F.col("should_fetch")).select("url")
+                    .join(seen, "url", "left_anti")
+                ).distinct()
+                frontier = frontier.unionByName(extra_frontier)
+                seen = seen.unionByName(extra_frontier.select("url")).distinct()
                 registry = registry.unionByName(
                     _registry_rows(extra_frontier, "should_fetch")
                     .join(registry.select("url"), "url", "left_anti")
                 )
-            st = WaveState(frontier, registry, seen, fetch_flags, self._empty(URL_COLS), store=store)
-        st.flags_live = (
-            bool(cfg.marked_paths) or st.fetch_flags.filter(F.col("flag")).limit(1).count() > 0
-        )
-        st.invalid_nonempty = st.invalid.limit(1).count() > 0
+            st = WaveState(frontier, registry, seen, pending, store=store)
+        st.flags_live = st.pending.limit(1).count() > 0
         # wave 0's frontier size — every later wave derives it from
         # observed counters (n_retries + n_deferred + n_enqueued)
         st.n_frontier = st.frontier.count()
@@ -779,12 +777,15 @@ class CrawlEngine:
                     st.page_stats.append(
                         stats_pool.submit(lambda df=stats: df.localCheckpoint(eager=True))
                     )
-                grouped, probe_obs, confirm = self._extract(st, ok)
+                grouped, probe_obs, confirm, wave_invalid = self._extract(st, ok)
                 firsts, new_urls, n_new = self._dedup(st, grouped, probe_obs, confirm)
                 n_carried = n_retries + (st.n_frontier - n_events) + n_new
                 wave_pages, lin = self._merge(st, sim, ok, deferred, firsts, new_urls, n_carried)
                 if store is not None:
-                    self._commit(st, {"events": wave_events, "pages": wave_pages, "lineage": lin})
+                    appends = {"events": wave_events, "pages": wave_pages, "lineage": lin}
+                    if wave_invalid is not None:
+                        appends["invalid"] = wave_invalid
+                    self._commit(st, appends)
                 st.wave_id += 1
             # the last wave's delta may still be running — its job
             # overlapped the loop's tail phases
@@ -832,7 +833,7 @@ class CrawlEngine:
     def _with_flag_in(self, st: WaveState, df: DataFrame) -> DataFrame:
         # shared by both fetch modes (depends only on "url")
         if st.flags_live:
-            return df.join(st.fetch_flags.withColumnRenamed("flag", "_flag_in"), "url", "left")
+            return df.join(st.pending.withColumn("_flag_in", F.lit(True)), "url", "left")
         return df.withColumn("_flag_in", F.lit(False))
 
     def _fetch(self, st: WaveState, batch: DataFrame, n_events: int) -> tuple[DataFrame, int]:
@@ -1044,14 +1045,18 @@ class CrawlEngine:
 
     def _extract(
         self, st: WaveState, ok: DataFrame
-    ) -> tuple[DataFrame, Observation | None, dict]:
+    ) -> tuple[DataFrame, Observation | None, dict, DataFrame | None]:
         """Extract → canonicalize → validate the fetched pages' links into
         one row per href with its min enqueue key, seen-tier probe
-        included, materialized once; folds invalid hrefs into the
-        known-invalid cache. Returns (grouped, the tier's overflow
-        Observation, dedup_new_urls' confirm-strategy arguments)."""
+        included, materialized once. Returns (grouped, the tier's
+        overflow Observation, dedup_new_urls' confirm-strategy
+        arguments, the wave's invalid-log delta or None when the wave
+        found no invalid href)."""
         cfg = self.cfg
-        # X1 + X2: extract → canonicalize → split empty/known-invalid.
+        # X1 + X2: extract → canonicalize → drop empty hrefs. P13, the
+        # reference's known-invalid cache (crawler.go:395), only spares
+        # re-validation; validity is a pure function of the href, so
+        # every wave validates its own hrefs and no cache is read.
         raw_links = extract_links(
             self._with_spans(ok).select("url", "event_rank", "depth", "spans"),
             id_cols=["url", "event_rank", "depth"],
@@ -1061,8 +1066,6 @@ class CrawlEngine:
             F.col("_n.href").alias("href"), F.col("_n.scheme").alias("scheme"),
             F.col("_n.host").alias("host"), F.col("_n.path").alias("path"),
         ).filter(F.col("href").isNotNull())
-        if st.invalid_nonempty:
-            norm = norm.join(st.invalid.withColumnRenamed("url", "href"), "href", "left_anti")  # P13
         judged = validity_flag(
             norm,
             self.base_host if cfg.same_host_only else None,
@@ -1132,16 +1135,12 @@ class CrawlEngine:
                 "maybe_bytes": int(counts.get("maybe_bytes") or 0),
             }
 
+        wave_invalid = None
         if int(counts["n_invalid_cand"] or 0):
-            new_invalid = (
-                grouped.filter(~F.col("valid")).select(F.col("href").alias("url"))
-                .join(st.invalid, "url", "left_anti")
-            )
-            st.invalid = st.invalid.unionByName(new_invalid)
-            if st.store is None:
-                st.invalid = st.invalid.localCheckpoint(eager=True)
-            st.invalid_nonempty = True
-        return grouped, probe_obs, confirm
+            # already distinct within the wave (one row per href)
+            wave_invalid = grouped.filter(~F.col("valid")).select(F.col("href").alias("url"))
+            st.invalid.append(wave_invalid)
+        return grouped, probe_obs, confirm, wave_invalid
 
     def _dedup(
         self, st: WaveState, grouped: DataFrame, probe_obs: Observation | None, confirm: dict
@@ -1200,8 +1199,8 @@ class CrawlEngine:
         self, st: WaveState, sim: DataFrame, ok: DataFrame, deferred: DataFrame,
         firsts: DataFrame, new_urls: DataFrame, n_frontier: int,
     ) -> tuple[DataFrame, DataFrame]:
-        """State MERGE + lineage: the pages delta, seen, the queue-map
-        values and the next frontier (size ``n_frontier``). Returns the
+        """State MERGE + lineage: the pages delta, seen, the pending
+        saves and the next frontier (size ``n_frontier``). Returns the
         wave's pages and lineage deltas. The urls registry needs no
         merge: ``_registry`` derives it from the logs at the result."""
         cfg = self.cfg
@@ -1219,25 +1218,13 @@ class CrawlEngine:
         # so a plain union keeps `seen` duplicate-free — no distinct
         st.seen = st.seen.unionByName(enqueued.select("url"))
 
-        # map-value updates for the next wave: any consuming event
-        # (save/fail) resets to false; fresh discoveries enter with
-        # their marked flag (SetMapValue(true) at crawler.go:276-278,
-        # Insert default false at queue/queue.go:104)
+        # any consuming event (save/fail) resets the map value to
+        # false. A fresh discovery's value is its marked flag
+        # (SetMapValue(true) at crawler.go:276-278), which the save
+        # reads off the URL itself, so discoveries never become pending.
         if st.flags_live:
-            consumed = (
-                sim.filter(F.col("transport_fail") | (F.col("http_status") == 200))
-                .select("url").distinct().withColumn("_new_flag", F.lit(False))
-            )
-            st.fetch_flags = (
-                st.fetch_flags.join(consumed, "url", "left")
-                .select(
-                    "url",
-                    F.when(F.col("_new_flag").isNotNull(), F.lit(False)).otherwise(F.col("flag")).alias("flag"),
-                )
-                .unionByName(new_urls.select("url", F.col("marked").alias("flag")))
-            )
-            if st.store is None:
-                st.fetch_flags = st.fetch_flags.localCheckpoint(eager=True)
+            consumed = sim.filter(F.col("transport_fail") | (F.col("http_status") == 200))
+            st.pending = st.pending.join(consumed.select("url"), "url", "left_anti")
 
         lin = self._lineage(st, sim, firsts, enqueued)
         st.lineage.append(lin)
@@ -1257,6 +1244,8 @@ class CrawlEngine:
 
         if st.store is None and st.wave_id % TRUNCATE_EVERY == TRUNCATE_EVERY - 1:
             st.seen = st.seen.localCheckpoint(eager=True)
+            if st.flags_live:
+                st.pending = st.pending.localCheckpoint(eager=True)
         return wave_pages, lin
 
     def _lineage(
@@ -1308,9 +1297,12 @@ class CrawlEngine:
         )
 
     def _commit(self, st: WaveState, appends: dict[str, DataFrame]) -> None:
-        """Checkpoint commit (T5) of the wave's state snapshots and its
-        append-log deltas, then read the snapshots back. The crawl's
-        first commit also logs the starting registry."""
+        """Checkpoint commit (T5) of the wave's state snapshots
+        (frontier, seen, pending, plus the seen tier's table) and its
+        append-log deltas, then read every snapshot back: a snapshot
+        left lazy would still read files of an older wave, which the
+        retention GC deletes. The crawl's first commit also logs the
+        starting registry."""
         if self.cfg.analyze_pages:
             # the stats log is committed too, so this wave's delta must
             # be finished: stats overlap this wave's later phases, not
@@ -1319,10 +1311,7 @@ class CrawlEngine:
             appends = {**appends, "page_stats": st.page_stats[-1]}
         if st.store.latest() is None:
             appends = {**appends, "registry": st.registry}
-        tables = {
-            "frontier": st.frontier, "seen": st.seen,
-            "fetch_flags": st.fetch_flags, "invalid": st.invalid,
-        }
+        tables = {"frontier": st.frontier, "seen": st.seen, "pending": st.pending}
         entry = self.tier.commit(
             st.store,
             st.wave_id,
@@ -1337,7 +1326,7 @@ class CrawlEngine:
                 "stats_format": STATS_FORMAT,
             },
         )
-        for name in ("seen", "invalid", "frontier") + (("fetch_flags",) if st.flags_live else ()):
+        for name in tables:
             setattr(st, name, _reread(entry, tables, name))
 
     def _stats_cols(self) -> str:
@@ -1383,7 +1372,7 @@ class CrawlEngine:
             urls=self._registry(st.registry, st.seen, events, pages),
             pages=pages,
             seen=st.seen,
-            invalid=st.invalid,
+            invalid=union_all(st.invalid, URL_COLS).distinct(),
             lineage=union_all(st.lineage, LINEAGE_COLS),
             waves=st.wave_id,
             page_stats=union_all(st.page_stats, self._stats_cols()),

@@ -1,9 +1,10 @@
-"""Explicit StructTypes for every engine table.
+"""Explicit StructTypes for the synthetic web's documents.
 
 The reference declares fixed schemas in Go structs + SQL DDL
 (reference models/sqlite/sqlite.go:50-65, models/url.go:50-59,
-models/page.go:49-54); we declare the Spark equivalents here and
-never infer. Column semantics documented in SURVEY.md §1.
+models/page.go:49-54). The crawl engine's tables are declared as DDL
+strings next to the code that writes them (the ``*_COLS`` constants in
+plans/wave.py); column semantics are documented in SURVEY.md §1.
 """
 
 from __future__ import annotations
@@ -27,63 +28,6 @@ DOCS = T.StructType(
         T.StructField("spans", T.ArrayType(SPAN, containsNull=False), False),
     ]
 )
-
-# urls — persistent frontier/URL registry (reference models/sqlite/sqlite.go:50-58).
-URLS = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),            # xxhash64(url): deterministic, parallel-safe
-        T.StructField("url", T.StringType(), False),         # canonical, case-sensitive unique
-        T.StructField("first_encountered", T.TimestampType(), False),
-        T.StructField("last_checked", T.TimestampType(), True),
-        T.StructField("last_saved", T.TimestampType(), True),
-        T.StructField("is_monitored", T.BooleanType(), False),
-        T.StructField("is_alive", T.BooleanType(), False),
-        T.StructField("version", T.IntegerType(), False),    # schema parity; MERGE replaces CAS
-    ]
-)
-
-# pages — append-only fetch log (reference models/sqlite/sqlite.go:59-65);
-# content string replaced by doc_id → docs.spans per input_hint.
-PAGES = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("url_id", T.LongType(), False),
-        T.StructField("added_at", T.TimestampType(), False),
-        T.StructField("doc_id", T.StringType(), False),
-    ]
-)
-
-# frontier — materialization of the reference's in-memory UniqueQueue
-# (reference queue/queue.go:19-24) as a table; ordering columns give the
-# deterministic n=1 crawl order (SURVEY §3.1 contract).
-FRONTIER = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("host", T.StringType(), False),        # partition key (salted at scale)
-        T.StructField("depth", T.IntegerType(), False),      # BFS wave number
-        T.StructField("parent_rank", T.LongType(), False),   # crawl rank of discovering page
-        T.StructField("span_offset", T.IntegerType(), False),# offset of discovering span
-        T.StructField("link_pos", T.IntegerType(), False),   # position of href within the span
-        T.StructField("should_fetch", T.BooleanType(), False),  # queue map value (queue/queue.go:15-17)
-        T.StructField("retry_count", T.IntegerType(), False),
-        T.StructField("marked", T.BooleanType(), False),
-    ]
-)
-
-# per-partition lineage row committed every wave (north rule).
-LINEAGE = T.StructType(
-    [
-        T.StructField("wave_id", T.IntegerType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("dequeued", T.LongType(), False),
-        T.StructField("fetched", T.LongType(), False),
-        T.StructField("deduped", T.LongType(), False),
-        T.StructField("enqueued", T.LongType(), False),
-    ]
-)
-
-# invalid-URL cache (reference crawler.go:50-53).
-INVALID_URLS = T.StructType([T.StructField("url", T.StringType(), False)])
 
 # TPC-H-ish testdata tables (TESTDATA.md) — names only; parquet carries schema.
 TESTDATA_TABLES = (
